@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -11,52 +10,11 @@ object Bench {
     // cores×(2-3) with AQE coalescing the small stages back down.
     val shufflePartitions =
       sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // SPARK_GRAFT_AQE=false exists only for A/B floor measurements;
-      // the engine's config is AQE ON (skew-join + runtime re-plan are
-      // non-negotiable at real scale).
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // NOTE: coalescePartitions.parallelismFirst=false was A/B-measured
-      // here and is ~19% SLOWER on this suite (size-based coalescing
-      // collapses medium shuffles to one partition and serializes their
-      // downstream stages) — keep AQE's parallelism-first default.
-      //
-      // Shuffle WRITER selection: with shuffle.partitions = 32 (≤ the
-      // 200 default bypassMergeThreshold) every SQL exchange falls into
-      // BypassMergeSortShuffleWriter — numPartitions temp files + a
-      // merge + an index per MAP TASK, which ProfileStacks measured as
-      // ~60% of executor thread-time on the exchange-heavy fold rows
-      // (hundreds of tiny exchanges × 32 file creates each). A real
-      // cluster runs thousands of shuffle partitions, always above the
-      // threshold, i.e. on UnsafeShuffleWriter's one-sorted-file path —
-      // threshold 0 makes the bench exercise the SAME writer the
-      // cluster uses (more representative) and drops the per-exchange
-      // file-creation storm (A/B'd, see OPTIMIZATION_r18.md;
-      // SPARK_GRAFT_BYPASS_THRESHOLD=200 restores the Spark default).
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      // Suite-position A/B knobs (VERDICT r17 #7): the app/SQL status
-      // stores retain per-job/stage/execution records (including plan
-      // descriptions) across all 310 suite executions even with the UI
-      // disabled; these bound that growth. Defaults = Spark defaults, so
-      // an unset run is unchanged; the A/B result is in
-      // OPTIMIZATION_r18.md.
-      .config("spark.sql.ui.retainedExecutions",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_EXECUTIONS", "1000"))
-      .config("spark.ui.retainedJobs",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_JOBS", "1000"))
-      .config("spark.ui.retainedStages",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_STAGES", "1000"))
-      .config("spark.ui.retainedTasks",
-        sys.env.getOrElse("SPARK_GRAFT_RETAINED_TASKS", "100000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // AQE stays at Spark's defaults: on, parallelism-first coalescing.
+    // parallelismFirst=false was A/B-measured here and is ~19% SLOWER on
+    // this suite (size-based coalescing collapses medium shuffles to one
+    // partition and serializes their downstream stages).
+    val spark = GraftSession(s"local[$cpus]", shufflePartitions.toInt)
     spark.sparkContext.setLogLevel("WARN")
     // Deployment knobs: run the suite under a different materialization
     // strategy (e.g. MODE=reliable + DIR=<checkpoint dir>) to measure the
@@ -212,15 +170,13 @@ object Bench {
         // read 1.5-2× slower in full-suite position than isolated with
         // identical code. A real deployment runs one pipeline per job
         // and its broadcasts die with it; the untimed GC is the honest
-        // analog. (SPARK_GRAFT_NO_GC=1 disables, for A/B.)
+        // analog.
         // The GC only ENQUEUES removals: ContextCleaner drains its queue
         // on its own thread, so without a pause the block removals land
         // inside the NEXT query's timed region (measured +0.5 s on many
         // small rows). 300 ms drains the per-query handful of broadcasts.
-        if (!sys.env.contains("SPARK_GRAFT_NO_GC")) {
-          System.gc()
-          Thread.sleep(300)
-        }
+        System.gc()
+        Thread.sleep(300)
         name -> res
       }
     }

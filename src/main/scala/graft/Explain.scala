@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted physical plan (and optionally a sample) for
   * one or all SparkEntry queries — the feedback loop for shuffle/pushdown/
   * codegen review. Usage: runMain graft.Explain <sfDir> [queryName|ALL|READ <table>]
@@ -10,14 +8,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val what = if (args.length > 1) args(1) else "ALL"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("local[8]", 8)
     spark.sparkContext.setLogLevel("ERROR")
     what match {
       case "READ" =>

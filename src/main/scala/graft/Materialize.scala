@@ -1,44 +1,36 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.storage.StorageLevel
 
-/** The single seam every eager materialization in graft goes through.
+/** The single seam every materialization in graft goes through.
   *
   * Iterative operators (transitive closure, breadcrumbs, connected
   * components) and multi-consumer frames (band tables, shingle frames)
-  * must be materialized eagerly: once to truncate lineage so per-iteration
-  * plans stay O(1), and once so expensive derivations aren't re-executed
-  * per consumer. HOW to materialize is a deployment decision, not an
-  * operator decision:
+  * must be materialized: once to truncate lineage so per-iteration plans
+  * stay O(1), and once so expensive derivations aren't re-executed per
+  * consumer. HOW to materialize is a deployment decision, not an
+  * operator decision. Both modes truncate lineage:
   *
-  *  - `local` (default): `localCheckpoint(eager = true)` — blocks stored
-  *    UNREPLICATED on executors. Fastest (no DFS round-trip); correct on
-  *    `local[*]` where executor == driver process. On a real cluster a
-  *    single lost executor makes the checkpointed RDD unrecoverable and
-  *    aborts the job — acceptable for short interactive work, NOT for a
-  *    multi-hour 100 TB dedup.
-  *  - `reliable`: `checkpoint(eager = true)` to the fault-tolerant
-  *    checkpoint directory (HDFS/object store). An executor loss
-  *    re-reads the checkpointed blocks from the DFS; lineage is truncated
-  *    exactly like the local variant, so iterative plan growth is equally
-  *    bounded. The directory comes from `SparkContext.setCheckpointDir`
-  *    or, if unset, from `spark.graft.materialize.dir`.
-  *  - `persist`: `persist(MEMORY_AND_DISK_2)` + a count() to force it —
-  *    2× replicated blocks, recompute-from-lineage on double loss. NOTE:
-  *    persist does NOT truncate lineage, so the iterative operators'
-  *    analysis cost grows with iteration count under this mode — it is
-  *    the right choice only for the single-shot multi-consumer frames
-  *    (band/shingle/SRP tables), which is why `reliable` is the
-  *    recommended cluster setting and `persist` an opt-in.
+  *  - `local` (default): `localCheckpoint` — blocks stored UNREPLICATED
+  *    on executors. Fastest (no DFS round-trip); correct on `local[*]`
+  *    where executor == driver process. On a real cluster a single lost
+  *    executor makes the checkpointed RDD unrecoverable and aborts the
+  *    job — acceptable for short interactive work, NOT for a multi-hour
+  *    100 TB dedup.
+  *  - `reliable`: `checkpoint` to the fault-tolerant checkpoint
+  *    directory (HDFS/object store). An executor loss re-reads the
+  *    checkpointed blocks from the DFS. The directory comes from
+  *    `SparkContext.setCheckpointDir` or, if unset, from
+  *    `spark.graft.materialize.dir`.
   *
   * Select with `spark.conf.set("spark.graft.materialize.mode", ...)` (a
   * runtime conf — switchable per job without rebuilding the session).
+  * Any other value fails the first materialization with a named error.
   */
 object Materialize {
 
   /** Runtime conf key selecting the materialization strategy:
-    * `local` (default) | `reliable` | `persist`.
+    * `local` (default) | `reliable`.
     */
   val ModeKey = "spark.graft.materialize.mode"
 
@@ -64,11 +56,10 @@ object Materialize {
       : Option[(java.lang.ref.WeakReference[org.apache.spark.SparkContext], String, String)] = None
 
   /** Eagerly materialize `df` under the configured strategy and return
-    * the materialized frame (lineage-truncated under `local`/`reliable`).
-    * Usable point-free: `df.transform(Materialize.checkpoint)`.
+    * the lineage-truncated frame. Usable point-free:
+    * `df.transform(Materialize.checkpoint)`.
     */
-  def checkpoint(df: DataFrame): DataFrame =
-    materialize(df, spark => spark.conf.get(ModeKey, "local"))
+  def checkpoint(df: DataFrame): DataFrame = mark(df, eager = true)
 
   /** [[checkpoint]] marked LAZILY: the first job that touches the frame
     * materializes it (and every later consumer reads the blocks), so a
@@ -78,102 +69,54 @@ object Materialize {
     * downstream action that is guaranteed to run before any second
     * consumer, and (b) nothing needs the row count (otherwise
     * [[checkpointCounted]] — same one-job property, count kept).
-    * Lineage truncation and mode dispatch are identical to
-    * [[checkpoint]]; under `persist` this is the persist call itself
-    * (lazy by nature) without the forcing count.
     */
-  def checkpointLazy(df: DataFrame): DataFrame =
-    materializeLazy(df, spark => spark.conf.get(ModeKey, "local"))
-
-  private def materializeLazy(
-      df: DataFrame,
-      modeFor: org.apache.spark.sql.SparkSession => String): DataFrame =
-    modeFor(df.sparkSession) match {
-      case "local" => df.localCheckpoint(eager = false)
-      case "reliable" =>
-        ensureReliableDir(df.sparkSession)
-        df.checkpoint(eager = false)
-      case "persist" => df.persist(StorageLevel.MEMORY_AND_DISK_2)
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be local|reliable|persist, got '$other'")
-    }
+  def checkpointLazy(df: DataFrame): DataFrame = mark(df, eager = false)
 
   /** [[checkpoint]] that also returns the frame's ROW COUNT at zero
-    * extra cost: the checkpoint is taken LAZILY and the count() is the
+    * extra cost: the checkpoint is taken LAZILY and the count is the
     * forcing action — one job, exactly like the eager form (whose own
     * materializer is an internal count it throws away). Exists for the
     * broadcast-dispatch pattern around every incremental-fold frame
     * (`broadcastIfSmall(df, Some(df.count()))` after an eager
     * checkpoint = a SECOND job per frame, ~8 per `curateIncremental`
     * fold — pure scheduler overhead that compounds across batches and
-    * that a static-width `Joins.fitsBroadcast(n, rowBytes)` dispatch on
+    * that a static-width `Joins.broadcastIfFits(df, n)` dispatch on
     * this count eliminates entirely; PlanSpec pins the fold's job
-    * count). Under `persist` the count that already forced the blocks
-    * is simply returned instead of discarded.
+    * count), and for fixpoint loops whose convergence test is a row
+    * count (closure frontiers, doubling hop tables).
     */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) =
-    materializeCounted(df, spark => spark.conf.get(ModeKey, "local"))
+    // force via the PHYSICAL rdd count, not Dataset.count(): the SQL
+    // count plans a partial/final aggregate whose exchange is its own
+    // AQE job (2 jobs), while rdd.count() is the very job the eager
+    // checkpoint's internal materializer runs (1) — same work, value kept
+    checkpointForced(df)(_.queryExecution.toRdd.count())
 
   /** [[checkpoint]] whose forcing action is the CALLER's own aggregate:
-    * the checkpoint is taken lazily and `force` (an action over the
-    * returned frame — e.g. a convergence-signature agg) materializes it.
-    * One job where eager-checkpoint-then-aggregate ran two AND scanned
-    * the fresh blocks a second time — the fixpoint loops (star CC, label
-    * propagation) pay that pattern once per round, so the per-round
-    * saving compounds. Same machinery as [[checkpointCounted]] (whose
-    * forcing action is just fixed to a count).
+    * the checkpoint is marked lazily and `force` (an action over the
+    * returned frame — e.g. a convergence-signature agg) materializes it
+    * as its job completes. One job where eager-checkpoint-then-aggregate
+    * ran two AND scanned the fresh blocks a second time — the fixpoint
+    * loops (star CC, label propagation) pay that pattern once per round,
+    * so the per-round saving compounds.
     */
-  def checkpointForced[T](df: DataFrame)(force: DataFrame => T): (DataFrame, T) =
-    materializeForced(df, spark => spark.conf.get(ModeKey, "local"))(force)
+  def checkpointForced[T](df: DataFrame)(force: DataFrame => T): (DataFrame, T) = {
+    val cp = mark(df, eager = false)
+    (cp, force(cp))
+  }
 
-  /** [[checkpointForced]] with [[checkpointIterative]]'s mode dispatch —
-    * for forcing actions INSIDE an iterative fixpoint loop, where
-    * `persist` (no lineage truncation) must fall through to a
-    * truncating mode.
+  /** The one mode dispatch: checkpoint `df` under the configured mode,
+    * eagerly (one job now) or lazily (the first job over the returned
+    * frame materializes it).
     */
-  def checkpointIterativeForced[T](df: DataFrame)(force: DataFrame => T): (DataFrame, T) =
-    materializeForced(df, iterativeMode)(force)
-
-  /** [[checkpointCounted]] with [[checkpointIterative]]'s mode dispatch —
-    * for fixpoint loops whose convergence test is a row count (closure
-    * frontiers, doubling hop tables): the count IS the forcing action,
-    * one job per round where eager-checkpoint-then-isEmpty ran two.
-    */
-  def checkpointIterativeCounted(df: DataFrame): (DataFrame, Long) =
-    materializeForced(df, iterativeMode)(_.queryExecution.toRdd.count())
-
-  /** [[checkpoint]] for frames produced INSIDE an iterative fixpoint loop
-    * (transitive closure, breadcrumbs, CC label propagation): `persist`
-    * does not truncate lineage, so under that mode a loop's plan grows
-    * per round and analysis cost compounds — exactly what the per-round
-    * materialization exists to prevent. Here `persist` dispatches to a
-    * lineage-truncating mode instead: `reliable` when a checkpoint dir is
-    * available (the durable choice the user signalled by picking a
-    * replicated mode), else `local` with a warning. Single-shot
-    * multi-consumer frames (band/shingle/SRP tables) keep plain
-    * [[checkpoint]], where `persist` is the right trade.
-    */
-  def checkpointIterative(df: DataFrame): DataFrame =
-    materialize(df, iterativeMode)
-
-  /** [[checkpointIterative]]'s mode dispatch: `persist` does not truncate
-    * lineage, so iterative callers fall through to a truncating mode.
-    */
-  private def iterativeMode(
-      spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get(ModeKey, "local") match {
-      case "persist" =>
-        val durable = spark.conf.getOption(DirKey).nonEmpty ||
-          spark.sparkContext.getCheckpointDir.nonEmpty
-        if (durable) "reliable"
-        else {
-          org.slf4j.LoggerFactory.getLogger("graft.Materialize").warn(
-            s"$ModeKey=persist does not truncate lineage; iterative " +
-              "operator falling back to mode=local (set a checkpoint " +
-              s"dir or $DirKey for a durable loop)")
-          "local"
-        }
-      case m => m
+  private def mark(df: DataFrame, eager: Boolean): DataFrame =
+    df.sparkSession.conf.get(ModeKey, "local") match {
+      case "local" => df.localCheckpoint(eager)
+      case "reliable" =>
+        ensureReliableDir(df.sparkSession)
+        df.checkpoint(eager)
+      case other => throw new IllegalArgumentException(
+        s"$ModeKey must be local|reliable, got '$other'")
     }
 
   /** Test hook: record the context's CURRENT checkpoint dir as seam-set
@@ -187,45 +130,6 @@ object Materialize {
       sc: org.apache.spark.SparkContext): Unit =
     lastReliable = sc.getCheckpointDir.map(d =>
       (new java.lang.ref.WeakReference(sc), "", d))
-
-  /** [[checkpoint]]'s mode dispatch with the row count returned: the
-    * checkpoint is marked lazily and `count()` on the returned frame is
-    * the forcing action (Spark materializes a marked RDD when the first
-    * job over it completes), so this is ONE job — the same job the
-    * eager form pays, with its result kept instead of discarded.
-    */
-  private def materializeCounted(
-      df: DataFrame,
-      modeFor: org.apache.spark.sql.SparkSession => String): (DataFrame, Long) =
-    // force via the PHYSICAL rdd count, not Dataset.count(): the SQL
-    // count plans a partial/final aggregate whose exchange is its own
-    // AQE job (2 jobs), while rdd.count() is the very job the eager
-    // checkpoint's internal materializer runs (1) — same work, value kept
-    materializeForced(df, modeFor)(_.queryExecution.toRdd.count())
-
-  /** The lazy-checkpoint-plus-caller-forcing-action core behind
-    * [[checkpointCounted]] / [[checkpointForced]]: mark the checkpoint
-    * lazily, run `force` (which materializes the marked RDD as its job
-    * completes), return the checkpointed frame and the action's result.
-    */
-  private def materializeForced[T](
-      df: DataFrame,
-      modeFor: org.apache.spark.sql.SparkSession => String)(
-      force: DataFrame => T): (DataFrame, T) = {
-    val spark = df.sparkSession
-    def run(cp: DataFrame): (DataFrame, T) = (cp, force(cp))
-    modeFor(spark) match {
-      case "local" =>
-        run(df.localCheckpoint(eager = false))
-      case "reliable" =>
-        ensureReliableDir(spark)
-        run(df.checkpoint(eager = false))
-      case "persist" =>
-        run(df.persist(StorageLevel.MEMORY_AND_DISK_2))
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be local|reliable|persist, got '$other'")
-    }
-  }
 
   /** The `reliable`-mode checkpoint-directory handshake, shared by the
     * eager and counted materializers.
@@ -263,22 +167,6 @@ object Materialize {
       case None if sc.getCheckpointDir.nonEmpty => ()
       case None => throw new IllegalStateException(
         s"$ModeKey=reliable requires SparkContext.setCheckpointDir(...) or $DirKey")
-    }
-  }
-
-  private def materialize(df: DataFrame, modeFor: org.apache.spark.sql.SparkSession => String): DataFrame = {
-    val spark = df.sparkSession
-    modeFor(spark) match {
-      case "local" => df.localCheckpoint(eager = true)
-      case "reliable" =>
-        ensureReliableDir(spark)
-        df.checkpoint(eager = true)
-      case "persist" =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK_2)
-        p.count() // force the blocks now; callers rely on eager semantics
-        p
-      case other => throw new IllegalArgumentException(
-        s"$ModeKey must be local|reliable|persist, got '$other'")
     }
   }
 }

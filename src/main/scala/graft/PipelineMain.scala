@@ -484,13 +484,7 @@ object PipelineMain {
     // rotating logs/sync.log at INFO + console at DEBUG/INFO per --debug
     graft.sources.PipelineLogger.active =
       new graft.sources.PipelineLogger(debug = c.debug)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(sys.env.getOrElse("SPARK_MASTER", "local[4]"), 4)
     spark.sparkContext.setLogLevel("WARN")
     try {
       if (c.compactStores.nonEmpty || c.compactIvfPq.nonEmpty) {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Similarity
 
@@ -27,15 +27,7 @@ object PlantedRecallBench {
     val dir = args.headOption.getOrElse("/root/repo/testdata/sf1_neardup")
     val threshold = if (args.length > 1) args(1).toDouble else 0.9
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = spark.read.parquet(s"$dir/embeddings.parquet").cache()

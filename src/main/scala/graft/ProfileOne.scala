@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: run ONE SparkEntry query through the noop sink (after the
   * Bench warmup + fixture prepare) and print every Spark job it ran —
@@ -18,16 +17,7 @@ object ProfileOne {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 2
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     // the Bench warmup, abbreviated: touch tables + shared JIT paths

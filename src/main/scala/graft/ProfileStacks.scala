@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: run ONE SparkEntry query in a loop with an in-JVM stack
   * sampler aggregating what every thread is doing — the level below
   * [[ProfileOne]]'s per-job table. ProfileOne showed several rows whose
@@ -21,16 +19,7 @@ object ProfileStacks {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val runs = if (args.length > 2) args(2).toInt else 10
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
 
     spark.range(1000000).selectExpr("sum(id)").collect()

@@ -25,16 +25,7 @@ object RecallBench {
     val k = if (args.length > 1) args(1).toInt else 10
     val threshold = if (args.length > 2) args(2).toDouble else 0.4
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_BYPASS_THRESHOLD", "0"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
 
     val emb = Tables(spark, sfDir, "embeddings")

@@ -6,14 +6,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.types.IntegerType
   * extension hook:
   *
   * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
+  * val spark = graft.GraftSession("local[4]", 4) // installs this extension
   * // or: --conf spark.sql.extensions=graft.functions.GraftExtensions
   * spark.sql("SELECT rolling_hash(text, 8) FROM docs")
   * }}}

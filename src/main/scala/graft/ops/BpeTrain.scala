@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   *    collect + a map-side fold applying the winning merge. Cost is
   *    rounds × (pair-shuffle of Σ|word| rows over |V| words) — linear
   *    per round, never corpus-sized after round 0; lineage is cut
-  *    through [[graft.Materialize.checkpointIterative]] every
+  *    through [[graft.Materialize.checkpoint]] every
   *    `checkpointEvery` rounds like the transitive-closure loop.
   *
   * Both arms implement the IDENTICAL selection rule — highest pair
@@ -192,7 +192,7 @@ object BpeTrain {
           col("freq"))
         val next =
           (if ((round + 1) % checkpointEvery == 0)
-            graft.Materialize.checkpointIterative(next0)
+            graft.Materialize.checkpoint(next0)
           else next0).cache()
         next.count()
         prev.unpersist()

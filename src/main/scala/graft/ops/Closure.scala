@@ -53,17 +53,17 @@ object Closure {
     // frontiers are eagerly checkpointed; the accumulated result is a
     // union of those materialized RDDs, so its plan stays shallow without
     // paying one extra materialization job per iteration.
-    var result = self.transform(Materialize.checkpointIterative)
-    // counted iterative checkpoints: the frontier count doubles as the
+    var result = self.transform(Materialize.checkpoint)
+    // counted checkpoints: the frontier count doubles as the
     // loop guard (one job per round; the retired isEmpty probe was a
     // second)
-    var (frontier, nFrontier) = Materialize.checkpointIterativeCounted(
+    var (frontier, nFrontier) = Materialize.checkpointCounted(
       edges.select(col("_e_id").as("descendant_id"),
         col("_e_parent").as("ancestor_id")))
     var depth = 0
     while (depth < maxDepth && nFrontier > 0) {
       result = result.unionByName(frontier)
-      val (next, n) = Materialize.checkpointIterativeCounted(
+      val (next, n) = Materialize.checkpointCounted(
         frontier
           .join(edges, frontier("ancestor_id") === edges("_e_id"))
           .select(frontier("descendant_id"), edges("_e_parent").as("ancestor_id"))
@@ -120,10 +120,10 @@ object Closure {
     var reach = nodes
       .select(col(idCol).as("descendant_id"), col(idCol).as("ancestor_id"),
         lit(0L).as("_dist"))
-      .transform(Materialize.checkpointIterative)
-    // counted iterative checkpoints: the hop count doubles as the loop
+      .transform(Materialize.checkpoint)
+    // counted checkpoints: the hop count doubles as the loop
     // guard (one job per round; the retired isEmpty probe was a second)
-    var (hop, nHop) = Materialize.checkpointIterativeCounted(
+    var (hop, nHop) = Materialize.checkpointCounted(
       nodes
         .select(col(idCol).as("_h_from"), col(parentCol).as("_h_to"))
         .where(col(parentCol).isNotNull))
@@ -138,8 +138,8 @@ object Closure {
           .select(composable("descendant_id"),
             hop("_h_to").as("ancestor_id"),
             (composable("_dist") + span).as("_dist")))
-        .transform(Materialize.checkpointIterative)
-      val (nextHop, n) = Materialize.checkpointIterativeCounted(
+        .transform(Materialize.checkpoint)
+      val (nextHop, n) = Materialize.checkpointCounted(
         hop.alias("a")
           .join(hop.alias("b"), col("a._h_to") === col("b._h_from"))
           .select(col("a._h_from").as("_h_from"), col("b._h_to").as("_h_to"))
@@ -293,14 +293,14 @@ object Closure {
     val base = nodes
       .select(col(idCol).as("_id"), col(parentCol).as("_parent"),
         col(nameCol).as("_name"))
-      .transform(Materialize.checkpointIterative)
+      .transform(Materialize.checkpoint)
     val ids = base.select(col("_id").as("_x"))
     // counted-while-forcing: each round's convergence probe (any rows
     // still walking, i.e. non-null _up?) is the checkpoint's forcing
     // action — one job per round, not checkpoint + isEmpty
     def pending(df: DataFrame): Long =
       df.where(col("_up").isNotNull).queryExecution.toRdd.count()
-    var (state, nPending) = Materialize.checkpointIterativeForced(
+    var (state, nPending) = Materialize.checkpointForced(
       base
         .join(ids, base("_parent") === col("_x"), "left")
         .select(col("_id"),
@@ -313,7 +313,7 @@ object Closure {
       // `_up` non-null ⇒ the ancestor row exists (pointers are only ever
       // set to ids present in the table), so the left join's NULL branch
       // is exactly the already-complete rows.
-      val (next, n) = Materialize.checkpointIterativeForced(
+      val (next, n) = Materialize.checkpointForced(
         state
           .join(anc, state("_up") === col("_a_id"), "left")
           .select(state("_id"),
@@ -355,7 +355,7 @@ object Closure {
     val base = nodes
       .select(col(idCol).as("_b_id"), col(parentCol).as("_b_parent"),
         col(nameCol).as("_b_name"))
-      .transform(Materialize.checkpointIterative)
+      .transform(Materialize.checkpoint)
 
     val ids = base.select(col("_b_id"))
     // Roots: parent NULL, or parent not present in the table (orphans).
@@ -370,16 +370,16 @@ object Closure {
     // for nothing (~25% of the operator at sf1/200k nodes). The final
     // union's lineage is `depth` flat union nodes over already-
     // materialized frames.
-    // counted iterative checkpoints: the level count doubles as the loop
+    // counted checkpoints: the level count doubles as the loop
     // guard and the append condition (one job per frontier; the retired
     // checkpoint-then-isEmpty shape was two)
-    val (roots0, nRoots) = Materialize.checkpointIterativeCounted(roots)
+    val (roots0, nRoots) = Materialize.checkpointCounted(roots)
     val levels = scala.collection.mutable.ArrayBuffer(roots0)
     var level = roots0
     var levelEmpty = nRoots == 0L
     var depth = 1
     while (depth < maxDepth && !levelEmpty) {
-      val (next, n) = Materialize.checkpointIterativeCounted(
+      val (next, n) = Materialize.checkpointCounted(
         base
           .join(level.withColumnRenamed("_b_id", "_l_id"),
             base("_b_parent") === col("_l_id"))

@@ -579,25 +579,17 @@ object Curation {
     }
     def idsOf(df: DataFrame, c: String): DataFrame =
       df.select(col(c).as(idCol))
-    // Size-dispatched broadcast for the fold's narrow id/label frames.
-    // Every dispatched frame below is materialized through
-    // `checkpointCounted` (the count IS the forcing action — one job,
-    // the same job the eager checkpoint paid, its result kept), and the
-    // per-row width is STATIC (schema width + row overhead, with
-    // string columns charged a conservative wide-id constant:
-    // single-id or id+label columns, never text), so the dispatch runs
-    // NO job at all — the retired `broadcastIfSmall(df,
-    // Some(df.count()))` form issued one count job per frame, ~8 per
-    // fold, pure scheduler overhead compounding across ingest batches
-    // (PlanSpec pins the fold's action count).
-    // fixed-width only: a FORCED hint must not ride staticRowBytes'
-    // per-string constant (see Joins.fixedWidth) — string-id frames skip
-    // the hint and AQE decides from runtime stats
-    def bcn(df: DataFrame, rows: Long): DataFrame =
-      if (Joins.fixedWidth(df) &&
-          Joins.fitsBroadcast(batch.sparkSession, rows,
-          Joins.staticRowBytes(df))) broadcast(df)
-      else df
+    // Size-dispatched broadcast (`Joins.broadcastIfFits`) for the fold's
+    // narrow id/label frames. Every dispatched frame below is
+    // materialized through `checkpointCounted` (the count IS the forcing
+    // action — one job, the same job the eager checkpoint paid, its
+    // result kept), and the per-row width is STATIC (single-id or
+    // id+label columns, never text), so the dispatch runs NO job at all
+    // — the retired `broadcastIfSmall(df, Some(df.count()))` form issued
+    // one count job per frame, ~8 per fold, pure scheduler overhead
+    // compounding across ingest batches (PlanSpec pins the fold's action
+    // count). String-id frames skip the hint and AQE decides from
+    // runtime stats.
 
     // 1. quality gate — stateless, rides the batch scan
     val kept = staged(Text.gopherFilter(batch, textCol), "kept")
@@ -607,7 +599,8 @@ object Curation {
     val (exNew, nExNew) = step("exact_probe")(Materialize.checkpointCounted(
       Dedup.exactIncremental(kept, idCol, textCol, stores.digests)))
     val batchExact = step("exact")(Materialize.checkpoint(staged(
-      kept.join(bcn(idsOf(exNew, "keeper_id"), nExNew), Seq(idCol), "left_semi"),
+      kept.join(Joins.broadcastIfFits(idsOf(exNew, "keeper_id"), nExNew),
+        Seq(idCol), "left_semi"),
       "exact")))
 
     // 2b. near-dup: band the batch ONCE (probe + store append share the
@@ -630,16 +623,18 @@ object Curation {
     val (admittedDedup, nAdmittedDedup) = step("keep_best")(
       Materialize.checkpointCounted(
         kb.where(col("keep"))
-          .join(bcn(blocked, nBlocked), col("cluster") === col("_bcomp"), "left_anti")
+          .join(Joins.broadcastIfFits(blocked, nBlocked),
+            col("cluster") === col("_bcomp"), "left_anti")
           .select(col("doc_id").as(idCol))))
     val deduped = step("deduped")(Materialize.checkpoint(staged(
-      batchExact.join(bcn(admittedDedup, nAdmittedDedup), Seq(idCol), "left_semi"),
+      batchExact.join(Joins.broadcastIfFits(admittedDedup, nAdmittedDedup),
+        Seq(idCol), "left_semi"),
       "deduped")))
     // store completeness: unpaired batch survivors enter self-labeled
     val (pairedIds, nPairedIds) = step("paired_ids")(
       Materialize.checkpointCounted(newRows.select(col("id").as(idCol))))
     val singletons = idsOf(batchExact, idCol)
-      .join(bcn(pairedIds, nPairedIds), Seq(idCol), "left_anti")
+      .join(Joins.broadcastIfFits(pairedIds, nPairedIds), Seq(idCol), "left_anti")
       .select(col(idCol).as("id"), col(idCol).as("component"))
 
     // 3. span decontamination against the persisted benchmark store
@@ -658,13 +653,14 @@ object Curation {
       case Some(sm) => step("semantic") {
         val cleanEmb = sm.embeddings
           .select(col(idCol), col(sm.vecCol))
-          .join(bcn(idsOf(clean, idCol), nClean), Seq(idCol), "left_semi")
+          .join(Joins.broadcastIfFits(idsOf(clean, idCol), nClean),
+            Seq(idCol), "left_semi")
         val (semBad, nSemBad) = Materialize.checkpointCounted(
           Similarity.semanticContaminated(
             cleanEmb, sm.benchmark, sm.vecCol, sm.threshold)
             .select(col(idCol)))
         Materialize.checkpoint(staged(
-          clean.join(bcn(semBad, nSemBad), Seq(idCol), "left_anti"),
+          clean.join(Joins.broadcastIfFits(semBad, nSemBad), Seq(idCol), "left_anti"),
           "semantic"))
       }
     }
@@ -701,7 +697,8 @@ object Curation {
       case None => (idsOf(screened, idCol).limit(0), 0L)
     })
     val head = step("head")(Materialize.checkpoint(staged(
-      screened.join(bcn(headIds, nHeadIds), Seq(idCol), "left_semi"), "head")))
+      screened.join(Joins.broadcastIfFits(headIds, nHeadIds),
+        Seq(idCol), "left_semi"), "head")))
 
     // 5. rolling per-source admission (earlier batches claim quota
     // first), then 6. per-batch training order over the admitted set
@@ -710,7 +707,7 @@ object Curation {
         head, sourceCol, idCol, capPerSource, stores.capCounts)))
     val out = staged(
       Text.shardOrder(
-        head.join(bcn(idsOf(admitted, idCol), nAdmitted),
+        head.join(Joins.broadcastIfFits(idsOf(admitted, idCol), nAdmitted),
           Seq(idCol), "left_semi"),
         idCol, numShards),
       "final")

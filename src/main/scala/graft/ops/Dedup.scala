@@ -1009,21 +1009,13 @@ object Dedup {
       .select(col("id"), coalesce(col("component"), col("id")).as("_lbl"))
     // batch-sized → broadcast when they fit the gates, so the quotient
     // build streams the edge side with zero label-side Exchange (above
-    // the gates the shuffle joins return). FIXED-WIDTH schemas only: a
-    // forced hint overrides Spark's own size checks, and staticRowBytes'
-    // flat per-string constant can underestimate multi-KB string ids
-    // (URL/path doc ids) — the driver-OOM direction. String-id frames
-    // skip the hint; AQE still auto-broadcasts off runtime stats.
-    def bcl(df: DataFrame): DataFrame =
-      if (Joins.fixedWidth(df) &&
-          Joins.fitsBroadcast(newEdges.sparkSession, nEndpoints,
-          Joins.staticRowBytes(df))) broadcast(df)
-      else df
+    // the gates, or for string-id schemas, the shuffle joins return)
     val la = endpointLbl.select(col("id").as("id_a"), col("_lbl").as("_la"))
     val lb = endpointLbl.select(col("id").as("id_b"), col("_lbl").as("_lb"))
     // contract each new edge through the endpoints' labels; edges inside
     // one existing component collapse to dropped self-loops
-    val quotient = e.join(bcl(la), Seq("id_a")).join(bcl(lb), Seq("id_b"))
+    val quotient = e.join(Joins.broadcastIfFits(la, nEndpoints), Seq("id_a"))
+      .join(Joins.broadcastIfFits(lb, nEndpoints), Seq("id_b"))
       .select(col("_la").as("id_a"), col("_lb").as("id_b"))
       .where(col("id_a") =!= col("id_b"))
       .distinct()
@@ -1185,14 +1177,6 @@ object Dedup {
     // Exchange; each exchange is its own AQE stage-job). Above the gates
     // the shuffle join returns — the standard size law.
     var edgeBound = 0L
-    // fixed-width gate: see incrementalMergeParts' bcl — a forced hint
-    // must never ride staticRowBytes' per-string constant for
-    // variable-width id schemas (driver-OOM direction)
-    def bcMins(mins: DataFrame): DataFrame =
-      if (Joins.fixedWidth(mins) &&
-          Joins.fitsBroadcast(pairs.sparkSession, 2L * edgeBound,
-          Joins.staticRowBytes(mins))) broadcast(mins)
-      else mins
     // large-star: every node u connects its STRICTLY LARGER neighbors to
     // m(u) = min(Γ(u) ∪ {u}); keeps (hi > lo) orientation by construction.
     def largeStar(e: DataFrame): DataFrame = {
@@ -1200,7 +1184,7 @@ object Dedup {
         .unionByName(e.select(col("lo").as("u"), col("hi").as("v")))
       val mins = sym.groupBy("u").agg(min(col("v")).as("_mv"))
         .select(col("u"), least(col("u"), col("_mv")).as("m"))
-      sym.join(bcMins(mins), "u")
+      sym.join(Joins.broadcastIfFits(mins, 2L * edgeBound), "u")
         .where(col("v") > col("u"))
         .select(col("v").as("hi"), col("m").as("lo"))
         .where(col("hi") =!= col("lo"))
@@ -1210,7 +1194,7 @@ object Dedup {
     // to the minimum smaller neighbor.
     def smallStar(e: DataFrame): DataFrame = {
       val mins = e.groupBy("hi").agg(min(col("lo")).as("m"))
-      val viaNeighbors = e.join(bcMins(mins), "hi")
+      val viaNeighbors = e.join(Joins.broadcastIfFits(mins, 2L * edgeBound), "hi")
         .where(col("lo") =!= col("m"))
         .select(col("lo").as("hi"), col("m").as("lo"))
       val self = mins.select(col("hi"), col("m").as("lo"))
@@ -1234,11 +1218,11 @@ object Dedup {
         sum(xxhash64(col("hi"), col("lo")).cast("decimal(38,0)")))
         .head().toSeq
     // The signature aggregate IS each round's forcing action
-    // (checkpointIterativeForced): the retired eager-checkpoint-then-
+    // (checkpointForced): the retired eager-checkpoint-then-
     // signature shape paid two jobs per round plus a second scan of the
     // fresh blocks. The emptiness check rides the signature's count
     // field instead of a separate isEmpty job.
-    val (edges0, sig0) = Materialize.checkpointIterativeForced(
+    val (edges0, sig0) = Materialize.checkpointForced(
       // Canonical (hi > lo) directed edges, self-loops dropped (a null
       // endpoint fails =!= and drops here — the shared CC null contract).
       raw.where(col("id_a") =!= col("id_b"))
@@ -1251,7 +1235,7 @@ object Dedup {
     var converged = prev.head == 0L
     while (!converged && round < maxRounds) {
       edgeBound = prev.head.asInstanceOf[Long]
-      val (next, sig) = Materialize.checkpointIterativeForced(
+      val (next, sig) = Materialize.checkpointForced(
         smallStar(largeStar(edges)))(signature)
       edges = next
       converged = sig == prev
@@ -1368,7 +1352,7 @@ object Dedup {
     // clustering with every doc its own component. One cheap scan over
     // the just-materialized checkpoint, no extra shuffle.
     // The checksum aggregate IS each round's forcing action
-    // (checkpointIterativeForced): eager-checkpoint-then-labelSum was
+    // (checkpointForced): eager-checkpoint-then-labelSum was
     // two jobs per round plus a second scan of the fresh blocks. The
     // init probe also returns the NODE COUNT (one extra agg field, no
     // extra job) — it sizes the per-round broadcast dispatch below.
@@ -1379,25 +1363,23 @@ object Dedup {
       (r.getLong(0), Option(r.getDecimal(1)))
     }
     val (l0, (nNodes, s0)) =
-      Materialize.checkpointIterativeForced(labels0)(labelProbe)
+      Materialize.checkpointForced(labels0)(labelProbe)
     var labels = l0
     var prevSum = s0
     var round = 0
     var converged = prevSum.isEmpty // empty edge set: trivially converged
-    // The label frame is node-sized and fixed-width; when it fits the
-    // broadcast gates the per-round join runs map-side against streaming
-    // edges — zero label-side Exchange per round (each exchange is its
-    // own AQE stage-job, so this halves the loop's job count). Above the
-    // gates (web-scale graphs) the shuffle join returns — the dispatch
-    // is the same size law as every other broadcast seam here.
-    val bcLabels = Joins.fixedWidth(labels0) && Joins.fitsBroadcast(
-      pairs.sparkSession, nNodes, Joins.staticRowBytes(labels0))
+    // The label frame is node-sized; when it fits the broadcast gates
+    // the per-round join runs map-side against streaming edges — zero
+    // label-side Exchange per round (each exchange is its own AQE
+    // stage-job, so this halves the loop's job count). Above the gates
+    // (web-scale graphs) the shuffle join returns — the dispatch is the
+    // same size law as every other broadcast seam here.
     while (!converged && round < maxRounds) {
       val lbl = labels.withColumnRenamed("id", "b")
         .withColumnRenamed("component", "_nl")
-      val (next, (_, s)) = Materialize.checkpointIterativeForced(
+      val (next, (_, s)) = Materialize.checkpointForced(
         edges
-          .join(if (bcLabels) broadcast(lbl) else lbl, Seq("b"))
+          .join(Joins.broadcastIfFits(lbl, nNodes), Seq("b"))
           .groupBy(col("a").as("id"))
           .agg(min(col("_nl")).as("component")))(labelProbe)
       labels = next

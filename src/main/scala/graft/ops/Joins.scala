@@ -28,34 +28,6 @@ object Joins {
 
   private val SampleRowsPerPartition = 8
 
-  /** Broadcast `dim` only when it is actually broadcast-sized; identity
-    * otherwise (the join then falls to AQE's shuffle-side strategies).
-    *
-    * Exists because an unconditional `broadcast()` hint OVERRIDES Spark's
-    * own size checks: a closure/member table that is dimension-sized at
-    * one SF (20k tasks → 140k pairs) is 15M+ rows two decades up, and the
-    * forced hint would collect ~1 GB to the driver and re-ship it to every
-    * executor — the measured bulk of `q_budget_report`'s sf10 cost, and an
-    * OOM on a real cluster. Below the thresholds the hint stays: a TRUE
-    * row count and a sampled row width beat the planner's sizeInBytes
-    * estimate (checkpointed frames propagate the PRE-materialization
-    * estimate, which over-counts after a selective derivation and would
-    * leave a broadcastable dim on the shuffle path). Above them, no hint —
-    * Spark/AQE still auto-broadcast from runtime stats if they disagree,
-    * which is the safe direction.
-    *
-    * Size is gated on BYTES as well as rows: `SizeEstimator` over a
-    * sample of rows taken from EVERY partition (a few per partition, not
-    * `head(n)` — head reads only the first partition, and for frames with
-    * variable-width columns sorted or clustered by size the head can
-    * undercount the true average width, the UNSAFE direction) gives
-    * count × avg-row-width. The JVM-object estimate over-counts vs the
-    * Tungsten broadcast encoding, which errs toward not broadcasting —
-    * the recoverable direction. Callers pass MATERIALIZED frames (the
-    * `count()`/sample are then cheap passes over resident blocks, not
-    * recomputes) and may supply `countHint` when the count is already
-    * known.
-    */
   /** The [[broadcastIfSmall]] gates for a frame whose per-row width is
     * STATICALLY known (a fixed-width column, e.g. a 32-hex digest) and
     * whose row count is bounded by `rows` — no sampling pass, so the
@@ -99,9 +71,8 @@ object Joins {
     }.sum + 64L
 
   /** True when every column is fixed-width — exactly the schemas whose
-    * [[staticRowBytes]] is EXACT. FORCED-broadcast dispatches (the CC
-    * loops' bcMins/bcLabels, the incremental merge's label sides, the
-    * curation fold's bcn) must require this: for variable-width columns
+    * [[staticRowBytes]] is EXACT. FORCED-broadcast dispatches
+    * ([[broadcastIfFits]]) must require this: for variable-width columns
     * a static per-string constant can UNDERestimate long payloads
     * (URL/path doc ids are routine in this domain), and a forced hint
     * overrides Spark's own size checks — the driver-OOM direction.
@@ -118,31 +89,72 @@ object Joins {
       case _ => true
     })
 
+  /** Broadcast `dim` only when it is actually broadcast-sized; identity
+    * otherwise (the join then falls to AQE's shuffle-side strategies).
+    *
+    * Exists because an unconditional `broadcast()` hint OVERRIDES Spark's
+    * own size checks: a closure/member table that is dimension-sized at
+    * one SF (20k tasks → 140k pairs) is 15M+ rows two decades up, and the
+    * forced hint would collect ~1 GB to the driver and re-ship it to every
+    * executor — the measured bulk of `q_budget_report`'s sf10 cost, and an
+    * OOM on a real cluster. Below the thresholds the hint stays: a TRUE
+    * row count and a sampled row width beat the planner's sizeInBytes
+    * estimate (checkpointed frames propagate the PRE-materialization
+    * estimate, which over-counts after a selective derivation and would
+    * leave a broadcastable dim on the shuffle path). Above them, no hint —
+    * Spark/AQE still auto-broadcast from runtime stats if they disagree,
+    * which is the safe direction.
+    *
+    * Size is gated on BYTES as well as rows: `SizeEstimator` over a
+    * sample of rows taken from EVERY partition (a few per partition, not
+    * `head(n)` — head reads only the first partition, and for frames with
+    * variable-width columns sorted or clustered by size the head can
+    * undercount the true average width, the UNSAFE direction) gives
+    * count × avg-row-width. The JVM-object estimate over-counts vs the
+    * Tungsten broadcast encoding, which errs toward not broadcasting —
+    * the recoverable direction. Callers pass MATERIALIZED frames (the
+    * `count()`/sample are then cheap passes over resident blocks, not
+    * recomputes) and may supply `countHint` when the count is already
+    * known.
+    */
   def broadcastIfSmall(dim: DataFrame, countHint: Option[Long] = None): DataFrame = {
-    val conf = dim.sparkSession.conf
-    val maxRows = conf.get(MaxBroadcastRowsKey, "2000000").toLong
-    val maxBytes =
-      conf.get(MaxBroadcastBytesKey, (256L * 1024 * 1024).toString).toLong
+    val spark = dim.sparkSession
     val n = countHint.getOrElse(dim.count())
-    val isFixedWidth = fixedWidth(dim)
-    if (n > maxRows) dim
-    // Fixed-width schemas (id/label/hash frames — the common dispatch
-    // targets) need no sampling job: staticRowBytes is EXACT for them,
-    // so the byte gate decides from the schema alone. Variable-width
-    // frames keep the sampled estimate — a static per-string constant
-    // can underestimate long payloads, the driver-OOM direction.
-    else if (isFixedWidth) {
-      if (n * staticRowBytes(dim) <= maxBytes) broadcast(dim) else dim
-    } else {
-      val sample =
-        dim.rdd.mapPartitions(_.take(SampleRowsPerPartition)).collect()
-      val estBytes =
-        if (sample.isEmpty) 0L
-        else org.apache.spark.util.SizeEstimator.estimate(sample) /
-          sample.length * n
-      if (estBytes <= maxBytes) broadcast(dim) else dim
-    }
+    val fits =
+      // Fixed-width schemas (id/label/hash frames — the common dispatch
+      // targets) need no sampling job: staticRowBytes is EXACT for them,
+      // so the gates decide from the schema alone. Variable-width frames
+      // keep the sampled estimate — a static per-string constant can
+      // underestimate long payloads, the driver-OOM direction.
+      if (fixedWidth(dim)) fitsBroadcast(spark, n, staticRowBytes(dim))
+      // the row gate alone first (zero width passes the byte gate), so
+      // a frame past it never pays the sampling job
+      else fitsBroadcast(spark, n, 0L) &&
+        fitsBroadcast(spark, n, sampledRowBytes(dim))
+    if (fits) broadcast(dim) else dim
   }
+
+  /** Average JVM-object row size over a few rows from EVERY partition
+    * (0 for an empty frame). One small driver-side collect.
+    */
+  private def sampledRowBytes(dim: DataFrame): Long = {
+    val sample =
+      dim.rdd.mapPartitions(_.take(SampleRowsPerPartition)).collect()
+    if (sample.isEmpty) 0L
+    else org.apache.spark.util.SizeEstimator.estimate(sample) / sample.length
+  }
+
+  /** The FORCED-broadcast gate for a frame of at most `rows` rows: hint
+    * only when every column is fixed-width ([[fixedWidth]]) and the
+    * static size passes [[fitsBroadcast]]. Runs no job, so it suits
+    * frames whose count is already known (a `checkpointCounted` result,
+    * a fixpoint round's signature). Variable-width frames never get the
+    * hint: AQE still auto-broadcasts them off runtime stats.
+    */
+  def broadcastIfFits(df: DataFrame, rows: Long): DataFrame =
+    if (fixedWidth(df) &&
+        fitsBroadcast(df.sparkSession, rows, staticRowBytes(df))) broadcast(df)
+    else df
 
   /** As-of join: for every left row, attach the latest right row with
     * `rightTs <= leftTs` for the same key (NULL payload when none).

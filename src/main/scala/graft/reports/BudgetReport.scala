@@ -28,17 +28,7 @@ object BudgetReport {
     *                 name: String, budgeted: Long seconds)
     * @param entries (task_id: String, duration: Long seconds)
     */
-  def apply(tasks: DataFrame, entries: DataFrame): DataFrame =
-    apply(tasks, entries, doublingClosure = false)
-
-  /** `doublingClosure` swaps the closure derivation for the O(log depth)
-    * doubling variant — the ClosureGradedAB `budget` case times both
-    * INSIDE the full report at any SF to keep the shipped choice a
-    * measured one (round-8 finding: variant A/Bs outside the graded
-    * context mislead; sf1 numbers in SCALE.md round 14).
-    */
-  def apply(tasks: DataFrame, entries: DataFrame,
-      doublingClosure: Boolean): DataFrame = {
+  def apply(tasks: DataFrame, entries: DataFrame): DataFrame = {
     // Recursive-CTE closure: same UNION ALL shape as the published report's
     // own recursive CTE (SAMPLE-REPORTS.md:59-75) — both assume a forest.
     // Materialized once before the broadcast: the UnionLoop otherwise
@@ -49,11 +39,7 @@ object BudgetReport {
     // broadcastIfSmall dispatch below (the retired eager-checkpoint +
     // uncounted broadcastIfSmall shape paid a separate count job)
     val (closure, nClosure) = Materialize.checkpointCounted(
-      if (doublingClosure)
-        Closure.transitiveClosureDoubling(tasks, "task_id", "parent_id")
-          .select(col("descendant_id"), col("ancestor_id"))
-      else
-        Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id"))
+      Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id"))
     // Eager aggregation below the join: 60M fact rows → ≤|tasks| partials
     // (the shuffle carries map-side-combined partial sums, not raw rows).
     val perTask = entries

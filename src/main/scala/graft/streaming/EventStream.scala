@@ -329,9 +329,9 @@ object EventStream {
     * write-to-temp + a RECOVERABLE rename sequence, NOT
     * overwrite-in-place: the updated plan READS the store it replaces,
     * and in-place overwrite would both trip Spark's
-    * overwrite-while-reading guard (under materialize modes that don't
-    * truncate lineage, e.g. `persist`) and lose the store on a mid-write
-    * crash. The sequence is: write `._next` fully; rename the live store
+    * overwrite-while-reading guard (for any plan whose lineage still
+    * reaches the store) and lose the store on a mid-write crash. The
+    * sequence is: write `._next` fully; rename the live store
     * aside to `._old`; promote `._next`; drop `._old` — so at every
     * instant a complete copy of the labeling exists on disk, and
     * [[recoverLabelStore]] (run at the head of each batch) promotes an
@@ -977,8 +977,8 @@ object EventStream {
     * what makes the trickle measurement transfer: rewrite bytes/batch ≈
     * touched × targetShardBytes ≈ the batch's component footprint,
     * independent of store size (the 256-shard sf1 trickle point
-    * measured 14–17% of store bytes/batch; StreamScaleBench's selector
-    * leg measures a second count on the same feed).
+    * measured 14–17% of store bytes/batch; the retired StreamScaleBench's
+    * selector leg measured a second count on the same feed).
     *
     * Store size alone is NOT sufficient — the selector's second
     * constraint is the BATCH FOOTPRINT, and it is measured, not

@@ -1,13 +1,11 @@
 package graft
 
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.storage.StorageLevel
 
-/** The cluster-durability seam: every eager materialization in graft's
-  * operators routes through [[Materialize.checkpoint]], and the conf must
-  * select the strategy at runtime (local mode keeps localCheckpoint;
-  * clusters switch to reliable checkpoint / replicated persist without
-  * touching operator code).
+/** The cluster-durability seam: every materialization in graft's
+  * operators routes through [[Materialize]], and the conf must select the
+  * strategy at runtime (local mode keeps localCheckpoint; clusters switch
+  * to reliable checkpoint without touching operator code).
   */
 class MaterializeSpec extends SparkSpec {
   import spark.implicits._
@@ -33,8 +31,7 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("checkpointCounted: ONE job total (the count IS the forcing " +
-    "action), correct count, lineage truncated — in all three modes") {
+  test("checkpointCounted: ONE job in local mode, right count in both modes") {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -68,15 +65,6 @@ class MaterializeSpec extends SparkSpec {
       assert(out._2 === 100)
       assert(out._1.queryExecution.analyzed.isInstanceOf[LogicalRDD])
       assert(out._1.count() === 100)
-    }
-    // persist: the forcing count is returned instead of discarded
-    withMode(Some("persist")) {
-      var out: (org.apache.spark.sql.DataFrame, Long) = null
-      val n = jobsOf { out = Materialize.checkpointCounted(frame()) }
-      assert(n === 1, s"checkpointCounted(persist) launched $n jobs, want 1")
-      assert(out._2 === 100)
-      assert(out._1.storageLevel === StorageLevel.MEMORY_AND_DISK_2)
-      out._1.unpersist(blocking = true)
     }
     // reliable: checkpoint files land in the dir; count correct (the DFS
     // write recomputes the frame inside the SAME job — Spark's standard
@@ -113,59 +101,13 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
-  test("persist mode: 2x-replicated storage level requested, rows preserved") {
-    withMode(Some("persist")) {
-      val out = Materialize.checkpoint(frame())
-      // local[4] has one block manager, so replication clamps to 1 at
-      // runtime — the REQUESTED level is what the seam controls
-      assert(out.storageLevel === StorageLevel.MEMORY_AND_DISK_2)
-      assert(out.count() === 100)
-      out.unpersist()
-    }
-  }
-
   test("unknown mode fails fast") {
-    withMode(Some("banana")) {
+    // a stale config naming the removed `persist` mode must fail by
+    // name, never fall back to some other strategy
+    for (mode <- Seq("banana", "persist")) withMode(Some(mode)) {
       val e = intercept[IllegalArgumentException](Materialize.checkpoint(frame()))
-      assert(e.getMessage.contains("banana"))
-    }
-  }
-
-  test("checkpointIterative never leaves a loop frame un-truncated under " +
-    "persist mode (dispatches to reliable when a dir exists, else local)") {
-    withMode(Some("persist")) {
-      // plain checkpoint under persist keeps the original plan (persist
-      // does not truncate lineage) — that is the documented single-shot
-      // behavior this guard exists to keep OUT of iterative loops
-      val plain = Materialize.checkpoint(frame())
-      assert(!plain.queryExecution.analyzed.isInstanceOf[LogicalRDD])
-      plain.unpersist()
-      // no checkpoint dir anywhere → local fallback, truncated
-      val it = Materialize.checkpointIterative(frame())
-      assert(it.queryExecution.analyzed.isInstanceOf[LogicalRDD])
-      assert(it.count() === 100)
-      // with the conf dir present → reliable, truncated AND durable
-      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-it").toString
-      spark.conf.set(Materialize.DirKey, dir)
-      val rel = Materialize.checkpointIterative(frame())
-      assert(rel.queryExecution.analyzed.isInstanceOf[LogicalRDD])
-      assert(rel.count() === 100)
-      val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-        .filter(java.nio.file.Files.isRegularFile(_)).count()
-      assert(files > 0, s"expected reliable checkpoint files under $dir")
-    }
-  }
-
-  test("iterative operators stay correct and lineage-bounded under persist mode") {
-    val chain = (1 to 12).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString))
-      .toDF("task_id", "parent_id")
-    val expect = graft.ops.Closure
-      .transitiveClosure(chain, "task_id", "parent_id").count()
-    withMode(Some("persist")) {
-      val got = graft.ops.Closure
-        .transitiveClosure(chain, "task_id", "parent_id")
-      assert(got.count() === expect)
+      assert(e.getMessage.contains(s"'$mode'"))
+      assert(e.getMessage.contains("local|reliable"))
     }
   }
 

@@ -374,15 +374,29 @@ class PlanSpec extends SparkSpec {
     // isolate the helper's dispatch from Spark's own stats-based broadcast
     // (checkpointed frames PROPAGATE size estimates, so auto-broadcast can
     // fire with no hint at all — the helper's job is only the hint)
+    // broadcastIfFits, the forced gate on a known row count: only
+    // fixed-width frames under both gates get the hint
+    val fixed = dim.select(col("k"), (col("k") * 2).as("v"))
+    def fits(df: org.apache.spark.sql.DataFrame) =
+      planOf(fact.join(ops.Joins.broadcastIfFits(df, 100), Seq("k")))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val small = planOf(fact.join(ops.Joins.broadcastIfSmall(dim), Seq("k")))
       assert(small.contains("BroadcastHashJoin"),
         s"100 rows must dispatch to broadcast:\n$small")
+      val fitsFixed = fits(fixed)
+      assert(fitsFixed.contains("BroadcastHashJoin"),
+        s"a fixed-width frame under the gates must get the hint:\n$fitsFixed")
+      val fitsString = fits(dim)
+      assert(!fitsString.contains("BroadcastHashJoin"),
+        s"a frame with a string column must NOT be force-broadcast:\n$fitsString")
       spark.conf.set(ops.Joins.MaxBroadcastRowsKey, "10")
       val big = planOf(fact.join(ops.Joins.broadcastIfSmall(dim), Seq("k")))
       assert(!big.contains("BroadcastHashJoin"),
         s"over-threshold dim must NOT be force-broadcast:\n$big")
+      val fitsOver = fits(fixed)
+      assert(!fitsOver.contains("BroadcastHashJoin"),
+        s"rows above ${ops.Joins.MaxBroadcastRowsKey} must NOT be force-broadcast:\n$fitsOver")
     } finally {
       spark.conf.unset(ops.Joins.MaxBroadcastRowsKey)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
