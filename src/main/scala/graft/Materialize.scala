@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** The single seam every materialization in graft goes through.
   *
-  * Iterative operators (transitive closure, breadcrumbs, connected
-  * components) and multi-consumer frames (band tables, shingle frames)
+  * Iterative operators (breadcrumb doubling, connected components, BPE
+  * merges) and multi-consumer frames (band tables, shingle frames)
   * must be materialized: once to truncate lineage so per-iteration plans
   * stay O(1), and once so expensive derivations aren't re-executed per
   * consumer. HOW to materialize is a deployment decision, not an
@@ -82,8 +82,7 @@ object Materialize {
     * fold — pure scheduler overhead that compounds across batches and
     * that a static-width `Joins.broadcastIfFits(df, n)` dispatch on
     * this count eliminates entirely; PlanSpec pins the fold's job
-    * count), and for fixpoint loops whose convergence test is a row
-    * count (closure frontiers, doubling hop tables).
+    * count).
     */
   def checkpointCounted(df: DataFrame): (DataFrame, Long) =
     // force via the PHYSICAL rdd count, not Dataset.count(): the SQL
@@ -136,7 +135,7 @@ object Materialize {
     *
     * Set ONCE per (context, conf value), not per call: setCheckpointDir
     * mkdirs a fresh UUID subdirectory every invocation — per-iteration
-    * calls in the closure/CC loops would issue one namenode round-trip
+    * calls in the breadcrumb/CC loops would issue one namenode round-trip
     * per round and scatter artifacts over dozens of directories. Gate on
     * the CONTEXT's own state too: a recreated context starts with no
     * checkpoint dir regardless of what was pushed before. A caller's

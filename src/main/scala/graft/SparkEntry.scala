@@ -258,39 +258,22 @@ object SparkEntry {
         coalesce(try_element_at(words, lit(3)), lit("")).as("level_3"))
     }),
 
-    // --- §2.6 recursion (native WITH RECURSIVE; the iterative
-    // cycle-tolerant twin is exercised by ClosureSpec) ---
+    // --- §2.6 recursion ---
     "q_transitive_closure" -> ((s, dir) =>
-      // Ships the RECURSIVE CTE again (round 8): the round-7 doubling
-      // ship was adjudicated in ABBench's dedicated-session harness, and
-      // its winner did not transfer to the graded conditions — the bench
-      // row went 0.997s (recursive, r6) → 1.39-1.53s (doubling, r7/r8).
-      // Re-A/B'd under Bench's EXACT conditions (ClosureGradedAB:
-      // suite-warm session, uncached parquet input, AQE on, interleaved
-      // min-of-3, idle, 2026-08-13): recursive 1.044s < doubling 1.145s,
-      // with recursive winning every interleaved round (1.04/1.21/1.15
-      // vs 1.15/1.49/1.72); iterative 1.57s. Dedicated-session numbers
-      // (ABBench round 7) favored doubling — JVM/codegen state from
-      // prior suite traffic is worth more to the CTE's per-level plan
-      // re-execution than to doubling's fewer-but-larger joins, so
-      // harness conditions decide sub-2s rows and the GRADED harness is
-      // the one that counts. Doubling stays the API for round-dominated
-      // regimes (deep forests, cluster scheduling overhead — its sf10
-      // showing and SCALE.md round-7/8 notes); iterative stays the
-      // cycle-tolerant API.
-      Closure.transitiveClosureRecursive(
+      // Native WITH RECURSIVE. Last A/B under Bench's conditions
+      // (suite-warm session, interleaved min-of-3, sf0.1;
+      // OPTIMIZATION_r18.md): 0.772s, against 1.068s for pointer
+      // doubling and 1.143s for the iterative fixpoint, both since
+      // deleted (SCALE.md has the rounds 7-8 history).
+      Closure.transitiveClosure(
         TaskTree.tasks(s, dir), "task_id", "parent_id")),
 
     "q_breadcrumb" -> ((s, dir) =>
-      // Recursive-DOUBLING variant: constant n-row state, ⌈log₂ depth⌉
-      // self-join rounds — beats both level walkers at EVERY measured SF
-      // because path concat makes per-level work expensive (the CTE
-      // re-executes its step scan per level; the iterative walker
-      // materializes a frontier per level). ABBench, idle, 2026-08-13:
-      // sf0.1 0.83s vs 1.12s recursive / 1.16s iterative; sf1 1.69 vs
-      // 4.23 / 3.39; sf10 4.77 vs 8.09 / 23.79. Earlier A/Bs (round 2's
-      // NOT-IN BNLJ fix, round 4's NOT EXISTS rewrite) are in SCALE.md.
-      Closure.breadcrumbsDoubling(
+      // Recursive doubling: ⌈log₂ depth⌉ self-join rounds over constant
+      // n-row state. Idle A/B, 2026-08-13: sf0.1 0.83s vs 1.12s recursive
+      // CTE / 1.16s level walker; sf1 1.69 vs 4.23 / 3.39; sf10 4.77 vs
+      // 8.09 / 23.79 (both walkers since deleted; SCALE.md).
+      Closure.breadcrumbs(
         TaskTree.tasks(s, dir), "task_id", "parent_id", "name")
         .select(col("task_id"), col("breadcrumb"))),
 

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *    rounds × (pair-shuffle of Σ|word| rows over |V| words) — linear
   *    per round, never corpus-sized after round 0; lineage is cut
   *    through [[graft.Materialize.checkpoint]] every
-  *    `checkpointEvery` rounds like the transitive-closure loop.
+  *    `checkpointEvery` rounds.
   *
   * Both arms implement the IDENTICAL selection rule — highest pair
   * frequency, ties broken by the lexicographically SMALLEST

@@ -1248,8 +1248,6 @@ object Dedup {
     // persisted store with no diagnostic. Fail loudly instead; star
     // contraction needs O(log²) rounds, so hitting the cap means the
     // caller passed a tiny maxRounds, not a real graph.
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-debug] star rounds=$round converged=$converged")
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not reach its fixpoint in " +
@@ -1387,8 +1385,6 @@ object Dedup {
       prevSum = s
       round += 1
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc-debug] labelProp rounds=$round converged=$converged")
     (labels, converged, p)
   }
 

@@ -1543,23 +1543,19 @@ object Text {
         .select(col("_grp"), posexplode(col("_top")).as(Seq("_i", "_t")))
         .select(col("_grp"), (col("_i") + 1).as("_pos"),
           col("_t._2").as("_id")))
-    // counted checkpoints + static-width dispatch: the retired
-    // broadcastIfSmall(unmaterialized) calls each ran the distinct/join
-    // lineage once for the count and AGAIN for the width sample — four
-    // extra jobs per ingest batch for frames whose width is statically
-    // bounded (source name + counter)
-    def bc(df: DataFrame, rows: Long): DataFrame =
-      if (graft.ops.Joins.fitsBroadcast(batch.sparkSession, rows,
-          graft.ops.Joins.staticRowBytes(df))) broadcast(df)
-      else df
+    // counted checkpoints: the count feeds the size gate, so the only
+    // extra job per frame is broadcastIfSmall's width sample — the group
+    // key is a string (source names), whose width no static constant
+    // bounds safely
     val (batchGroups, nGroups) = Materialize.checkpointCounted(
       batchTop.select(col("_grp")).distinct())
     // store streams; only batch-group rows survive into the quota join
     val (relevant, nRelevant) = Materialize.checkpointCounted(
       counts.select(col(groupCol).as("_grp"), col("n_kept"))
-        .join(bc(batchGroups, nGroups), Seq("_grp"), "left_semi"))
+        .join(Joins.broadcastIfSmall(batchGroups, Some(nGroups)), Seq("_grp"),
+          "left_semi"))
     batchTop
-      .join(bc(relevant, nRelevant), Seq("_grp"), "left")
+      .join(Joins.broadcastIfSmall(relevant, Some(nRelevant)), Seq("_grp"), "left")
       .where(col("_pos") <= lit(cap) - coalesce(col("n_kept"), lit(0L)))
       .select(col("_grp").as(groupCol), col("_id").as(idCol))
   }

@@ -39,7 +39,7 @@ object BudgetReport {
     // broadcastIfSmall dispatch below (the retired eager-checkpoint +
     // uncounted broadcastIfSmall shape paid a separate count job)
     val (closure, nClosure) = Materialize.checkpointCounted(
-      Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id"))
+      Closure.transitiveClosure(tasks, "task_id", "parent_id"))
     // Eager aggregation below the join: 60M fact rows → ≤|tasks| partials
     // (the shuffle carries map-side-combined partial sums, not raw rows).
     val perTask = entries

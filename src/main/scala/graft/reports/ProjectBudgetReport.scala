@@ -22,7 +22,7 @@ object ProjectBudgetReport {
     // itself materialized below), so it needs no checkpoint of its own:
     // the UnionLoop executes once, inside memberOf's forcing job. (The
     // retired eager checkpoint here was one extra action per report.)
-    val closure = Closure.transitiveClosureRecursive(tasks, "task_id", "parent_id")
+    val closure = Closure.transitiveClosure(tasks, "task_id", "parent_id")
     val roots = tasks.where(col("parent_id").isNull)
       .select(col("task_id").as("project_id"), col("name").as("project_name"))
     // descendant → its root ancestor; materialized once — it feeds two

@@ -1,16 +1,19 @@
 package graft.ops
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Fixture trees per FIXTURES.md §2: ≥3 levels, a cycle pair, an orphan,
   * deep chains — semantics from the reference walkers
-  * (`dlt_fetch_timecamp.py:313-346`, `:527-547`).
+  * (`dlt_fetch_timecamp.py:313-346`, `:527-547`). Expected values come
+  * from the in-memory references `ClosureProps.refAncestors` and
+  * `ClosureProps.refBreadcrumbs`.
   */
 class ClosureSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tree = Seq(
+  private val treeRows = Seq[(String, String, String)](
     // (task_id, parent_id, name)
     ("1", null, "root"),
     ("2", "1", "child"),
@@ -18,12 +21,39 @@ class ClosureSpec extends SparkSpec {
     ("4", null, "root2"),
     ("9", "404", "orphan"),      // parent missing from table
     ("7", "8", "cycA"),          // 7 <-> 8 cycle
-    ("8", "7", "cycB")
-  ).toDF("task_id", "parent_id", "name")
+    ("8", "7", "cycB"))
+
+  private def tree = treeRows.toDF("task_id", "parent_id", "name")
+
+  private def forestRows = treeRows.filterNot(r => Set("7", "8")(r._1))
+
+  private def chainRows(depth: Int) = (1 to depth).map(i =>
+    (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
+
+  private def chain(depth: Int) =
+    chainRows(depth).toDF("task_id", "parent_id", "name")
+
+  private def parents(rows: Seq[(String, String, String)]) =
+    rows.map(r => r._1 -> Option(r._2)).toMap
+
+  private def closureSet(rows: Seq[(String, String, String)], maxDepth: Int) =
+    Closure.transitiveClosure(rows.toDF("task_id", "parent_id", "name"),
+      "task_id", "parent_id", maxDepth).as[(String, String)].collect()
+
+  /** `task_id -> breadcrumb` from the operator and from the reference. */
+  private def crumbs(rows: Seq[(String, String, String)], maxDepth: Int) = {
+    val got = Closure.breadcrumbs(rows.toDF("task_id", "parent_id", "name"),
+      "task_id", "parent_id", "name", maxDepth)
+      .select("task_id", "breadcrumb").as[(String, String)].collect()
+    val want = ClosureProps.refBreadcrumbs(
+      rows.map(r => r._1 -> (Option(r._2), r._3)).toMap, maxDepth)
+      .map { case (id, p) => id -> p.map(_.mkString(" / ")).orNull }
+    (got.toMap, want, got.length)
+  }
 
   test("transitive closure contains all self-pairs (base case)") {
     val c = Closure.transitiveClosure(tree, "task_id", "parent_id")
-    val selfPairs = c.where($"descendant_id" === $"ancestor_id").count()
+    val selfPairs = c.where($"descendant_id" === $"ancestor_id").distinct().count()
     assert(selfPairs == 7)
   }
 
@@ -34,17 +64,17 @@ class ClosureSpec extends SparkSpec {
     assert(c == Set("1", "2", "3"))
   }
 
-  test("closure converges on cycles to the exact finite pair set") {
-    val c = Closure.transitiveClosure(tree, "task_id", "parent_id", maxDepth = 50)
-    // cycle 7<->8 yields exactly {(7,7),(7,8),(8,8),(8,7)} — no duplicates,
-    // termination before the cap
-    import spark.implicits._
-    val cyc = c.where($"descendant_id".isin("7", "8"))
-      .as[(String, String)].collect().toSet
-    assert(cyc == Set(("7", "7"), ("7", "8"), ("8", "8"), ("8", "7")))
-    // whole-closure row count is exact: 7 self + (2,1)(3,2)(3,1)(9,404)(7,8)(8,7)
-    assert(c.count() == 13)
-    assert(c.distinct().count() == 13)
+  test("closure on the 7<->8 cycle stops at maxDepth; its distinct pairs " +
+    "are exactly the finite pair set") {
+    val c = closureSet(treeRows, maxDepth = 50)
+    // UNION ALL re-derives the cycle once per winding: levels 0..50 for
+    // each of 7 and 8, then the level bound ends the loop
+    val cyc = c.filter(p => Set("7", "8")(p._1))
+    assert(cyc.length == 2 * 51)
+    assert(cyc.toSet == Set(("7", "7"), ("7", "8"), ("8", "8"), ("8", "7")))
+    // every distinct pair: 7 self + (2,1)(3,2)(3,1)(9,404)(7,8)(8,7)
+    assert(c.toSet.size == 13)
+    assert(c.toSet == ClosureProps.refAncestors(parents(treeRows), 50))
   }
 
   test("breadcrumbs: root-to-self path joined by ' / '") {
@@ -77,21 +107,16 @@ class ClosureSpec extends SparkSpec {
   }
 
   test("closure of a 10-deep chain reaches the root (depth > default levels)") {
-    val chain = (1 to 10).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
-    val c = Closure.transitiveClosure(chain, "task_id", "parent_id")
+    val c = Closure.transitiveClosure(chain(10), "task_id", "parent_id")
     val anc10 = c.where($"descendant_id" === "10").count()
     assert(anc10 == 10) // self + 9 ancestors
   }
 
   test("recursive-CTE closure matches the iterative fixpoint on a forest") {
-    val forest = tree.where(!$"task_id".isin("7", "8")) // drop the cycle pair
-    val iter = Closure.transitiveClosure(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    val rec = Closure.transitiveClosureRecursive(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    assert(iter.toSeq == rec.toSeq)
+    // the in-memory reference walks parent pointers to their fixpoint
+    val c = closureSet(forestRows, maxDepth = 32)
+    assert(c.length == c.toSet.size) // a forest derives each pair once
+    assert(c.toSet == ClosureProps.refAncestors(parents(forestRows)))
   }
 
   test("recursive-CTE paths raise the engine's 1M-row recursion cap " +
@@ -100,12 +125,12 @@ class ClosureSpec extends SparkSpec {
     val before = spark.conf.getOption(key)
     try {
       spark.conf.set(key, 1000000)
-      Closure.transitiveClosureRecursive(
+      Closure.transitiveClosure(
         tree.where(!$"task_id".isin("7", "8")), "task_id", "parent_id").count()
       assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
       // never LOWERED if a session already set it higher than our target
       spark.conf.set(key, Int.MaxValue)
-      Closure.breadcrumbsRecursive(tree, "task_id", "parent_id", "name").count()
+      Closure.transitiveClosure(tree, "task_id", "parent_id").count()
       assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
     } finally before match {
       case Some(v) => spark.conf.set(key, v)
@@ -113,96 +138,72 @@ class ClosureSpec extends SparkSpec {
     }
   }
 
-  test("pointer-doubling closure matches the fixpoint, incl. a deep chain") {
-    val forest = tree.where(!$"task_id".isin("7", "8")) // acyclic input only
-    val iter = Closure.transitiveClosure(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    val dbl = Closure.transitiveClosureDoubling(forest, "task_id", "parent_id")
-      .orderBy("descendant_id", "ancestor_id").collect()
-    assert(iter.toSeq == dbl.toSeq)
-    // depth 10 (crosses three doubling rounds: spans 1,2,4,8,16) — and on a
-    // forest doubling must emit each pair EXACTLY once with no dedup step
-    val chain = (1 to 10).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
-    val c = Closure.transitiveClosureDoubling(chain, "task_id", "parent_id")
-    assert(c.count() === 55) // sum 1..10, no duplicates
-    assert(c.distinct().count() === 55)
-    assert(c.where($"descendant_id" === "10").count() === 10)
-  }
-
-  test("recursive-CTE breadcrumbs: cycle-safe, matches iterative") {
-    val iter = Closure.breadcrumbs(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    val rec = Closure.breadcrumbsRecursive(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    assert(iter.toSeq == rec.toSeq) // incl. NULL breadcrumbs for the 7<->8 cycle
+  test("closure of the 10-deep chain: 55 rows, each pair exactly once, " +
+    "equal to the reference ancestor set") {
+    val c = closureSet(chainRows(10), maxDepth = 32)
+    assert(c.length === 55) // sum 1..10
+    assert(c.toSet === ClosureProps.refAncestors(parents(chainRows(10))))
   }
 
   test("doubling breadcrumbs: orphan + cycle semantics match iterative, deep chain composes") {
-    val iter = Closure.breadcrumbs(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    val dbl = Closure.breadcrumbsDoubling(tree, "task_id", "parent_id", "name")
-      .select("task_id", "breadcrumb").orderBy("task_id").collect()
-    assert(iter.toSeq == dbl.toSeq) // NULL for 7<->8; orphan 9 starts its own path
+    val (got, want, n) = crumbs(treeRows, maxDepth = 32)
+    assert(n == treeRows.length)
+    assert(got == want) // NULL for 7<->8; orphan 9 starts its own path
+    assert(got("7") == null && got("9") == "orphan")
     // depth 11: crosses spans 1,2,4,8 with a non-power-of-two remainder,
     // so the final compose glues a full-path prefix onto a 2^k segment
-    val chain = (1 to 11).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
-    val bc = Closure.breadcrumbsDoubling(chain, "task_id", "parent_id", "name")
-      .where($"task_id" === "11").select("breadcrumb").as[String].head()
-    assert(bc === (1 to 11).map(i => s"n$i").mkString(" / "))
+    val (deep, deepWant, _) = crumbs(chainRows(11), maxDepth = 32)
+    assert(deep == deepWant)
+    assert(deep("11") === (1 to 11).map(i => s"n$i").mkString(" / "))
   }
 
-  test("depth-cap boundary is unified: all three closure variants agree " +
+  test("depth-cap boundary: the closure equals the reference ancestor set " +
     "at exactly maxDepth and maxDepth+1") {
-    val chain = (1 to 8).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
     for (cap <- Seq(4, 5)) {
-      val iter = Closure.transitiveClosure(chain, "task_id", "parent_id",
-        maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
-      val dbl = Closure.transitiveClosureDoubling(chain, "task_id", "parent_id",
-        maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
-      val rec = Closure.transitiveClosureRecursive(chain, "task_id", "parent_id",
-        maxDepth = cap).orderBy("descendant_id", "ancestor_id").collect().toSeq
-      assert(iter == dbl, s"iterative vs doubling at cap $cap")
-      assert(iter == rec, s"iterative vs recursive at cap $cap")
+      val c = closureSet(chainRows(8), cap)
+      assert(c.length == c.toSet.size, s"duplicate pairs at cap $cap")
+      assert(c.toSet == ClosureProps.refAncestors(parents(chainRows(8)), cap),
+        s"closure vs reference at cap $cap")
       // distance ≤ cap exactly: node 8 sees itself + cap ancestors
-      assert(iter.count(_.getString(0) == "8") == cap + 1)
+      assert(c.count(_._1 == "8") == cap + 1)
     }
   }
 
-  test("depth-cap boundary is unified: all three breadcrumb variants agree " +
-    "at exactly maxDepth and maxDepth+1") {
-    val chain = (1 to 8).map(i =>
-      (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
-      .toDF("task_id", "parent_id", "name")
+  test("depth-cap boundary: breadcrumbs equal the reference walker at " +
+    "exactly maxDepth and maxDepth+1") {
     for (cap <- Seq(4, 5)) {
-      val iter = Closure.breadcrumbs(chain, "task_id", "parent_id", "name",
-        maxDepth = cap).select("task_id", "breadcrumb").orderBy("task_id")
-        .collect().toSeq
-      val rec = Closure.breadcrumbsRecursive(chain, "task_id", "parent_id",
-        "name", maxDepth = cap).select("task_id", "breadcrumb")
-        .orderBy("task_id").collect().toSeq
-      val dbl = Closure.breadcrumbsDoubling(chain, "task_id", "parent_id",
-        "name", maxDepth = cap).select("task_id", "breadcrumb")
-        .orderBy("task_id").collect().toSeq
-      assert(iter == rec, s"walker vs recursive at cap $cap")
-      assert(iter == dbl, s"walker vs doubling at cap $cap")
+      val (got, want, _) = crumbs(chainRows(8), cap)
+      assert(got == want, s"breadcrumbs vs reference at cap $cap")
       // levels ≤ cap have paths; deeper nodes NULL
-      assert(iter.count(!_.isNullAt(1)) == cap)
+      assert(got.values.count(_ != null) == cap)
     }
   }
 
-  test("doubling closure on cyclic input degrades to the iterative set " +
-    "with assumeForest = false") {
-    val iter = Closure.transitiveClosure(tree, "task_id", "parent_id",
-      maxDepth = 50).orderBy("descendant_id", "ancestor_id").collect().toSeq
-    val dbl = Closure.transitiveClosureDoubling(tree, "task_id", "parent_id",
-      maxDepth = 50, assumeForest = false)
-      .orderBy("descendant_id", "ancestor_id").collect().toSeq
-    assert(iter == dbl) // incl. the 7<->8 cycle pairs, deduplicated
+  test("breadcrumbs over a 12-deep chain make at most ceil(log2 12) + 2 = 6 " +
+    "Materialize checkpoints (a level-per-round walker makes 14)") {
+    // every Materialize mode marks through Dataset.localCheckpoint /
+    // checkpoint, eager or lazy, and each mark is one listener action
+    val funcs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val sentinel = spark.range(1).toDF()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        funcs.add(if (qe eq sentinel.queryExecution) "sentinel" else f)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Closure.breadcrumbs(chain(12), "task_id", "parent_id", "name")
+      // listener delivery is async but FIFO: every operator action
+      // arrives before the sentinel's
+      sentinel.collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!funcs.contains("sentinel") && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      assert(funcs.contains("sentinel"), "listener saw no sentinel — harness broken")
+      val marks = funcs.toArray.takeWhile(_ != "sentinel")
+        .count(f => f == "localCheckpoint" || f == "checkpoint")
+      assert(marks > 0, "listener saw no checkpoint — harness broken")
+      assert(marks <= 6, s"breadcrumbs made $marks checkpoints on a 12-deep chain")
+    } finally spark.listenerManager.unregister(listener)
   }
 }

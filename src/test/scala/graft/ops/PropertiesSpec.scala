@@ -43,11 +43,43 @@ object ClosureProps extends Properties("graft") {
     } yield (a, b))
   } yield pairs
 
-  private def refAncestors(forest: Map[Long, Option[Long]]): Set[(Long, Long)] =
-    forest.keySet.flatMap { id =>
-      Iterator.iterate(Option(id))(o => o.flatMap(forest.get).flatten)
-        .takeWhile(_.isDefined).map(a => id -> a.get).toSet
+  /** Random parent map over ids 0..n-1 whose parents range over 0..n+2:
+    * self-loops, cycles and missing parents (ids ≥ n) all occur.
+    */
+  private val parentMapGen: Gen[Map[Long, Option[Long]]] = for {
+    n <- Gen.choose(1, 20)
+    parents <- Gen.listOfN(n, Gen.option(Gen.choose(0L, n + 2L)))
+  } yield parents.zipWithIndex.map { case (p, i) => i.toLong -> p }.toMap
+
+  /** (node, ancestor) pairs at walk distance ≤ `maxDepth`, self included;
+    * a missing parent is an ancestor whose own walk ends there.
+    */
+  private[ops] def refAncestors[K](
+      parents: Map[K, Option[K]], maxDepth: Int = Int.MaxValue): Set[(K, K)] =
+    parents.keySet.flatMap { id =>
+      Iterator.iterate(Option(id))(o => o.flatMap(parents.get).flatten)
+        .takeWhile(_.isDefined).zipWithIndex.takeWhile(_._2 <= maxDepth)
+        .map { case (a, _) => id -> a.get }.toSet
     }
+
+  /** The reference walker: each node's names root first, self last, up to
+    * the first root or missing parent; `None` when the path would exceed
+    * `maxDepth` levels (deep chains and cycles alike).
+    */
+  private[ops] def refBreadcrumbs[K](
+      nodes: Map[K, (Option[K], String)], maxDepth: Int): Map[K, Option[Seq[String]]] = {
+    @scala.annotation.tailrec
+    def walk(id: K, acc: List[String]): Option[List[String]] = {
+      val (parent, name) = nodes(id)
+      val path = name :: acc
+      if (path.size > maxDepth) None
+      else parent.filter(nodes.contains) match {
+        case Some(p) => walk(p, path)
+        case None => Some(path)
+      }
+    }
+    nodes.keySet.map(id => id -> walk(id, Nil)).toMap
+  }
 
   property("transitiveClosure = reflexive ancestor set on random forests") =
     forAll(forestGen) { forest =>
@@ -60,33 +92,36 @@ object ClosureProps extends Properties("graft") {
       got == refAncestors(forest)
     }
 
-  property("iterative and native-recursive closure agree on forests") =
-    forAll(forestGen) { forest =>
-      val df = forest.toSeq
+  property("transitiveClosure distinct pairs = capped ancestor set on " +
+    "random parent maps with cycles and missing parents") =
+    forAll(parentMapGen, Gen.choose(0, 6)) { (parents, cap) =>
+      val df = parents.toSeq
         .map { case (id, p) => (id.toString, p.map(_.toString).orNull) }
         .toDF("id", "parent")
-      val it = Closure.transitiveClosure(df, "id", "parent")
-        .as[(String, String)].collect().toSet
-      val rec = Closure.transitiveClosureRecursive(df, "id", "parent")
-        .as[(String, String)].collect().toSet
-      it == rec
+      val got = Closure.transitiveClosure(df, "id", "parent", maxDepth = cap)
+        .as[(String, String)].collect()
+        .map { case (d, a) => (d.toLong, a.toLong) }.toSet
+      got == refAncestors(parents, cap)
     }
 
   property("breadcrumb path: root-first, self-last, levels = element_at") =
-    forAll(forestGen) { forest =>
-      val df = forest.toSeq
+    forAll(parentMapGen) { parents =>
+      val df = parents.toSeq
         .map { case (id, p) => (id.toString, p.map(_.toString).orNull, s"n$id") }
         .toDF("id", "parent", "name")
+      val want = refBreadcrumbs(
+        parents.map { case (id, p) => id -> (p, s"n$id") }, maxDepth = 32)
       val out = Closure.withLevelColumns(
         Closure.breadcrumbs(df, "id", "parent", "name"), "g", 3)
-      val rows = out.select(col("id"), col("path"),
+      val rows = out.select(col("id"), col("path"), col("breadcrumb"),
         col("g_level_1"), col("g_level_2"), col("g_level_3")).collect()
-      rows.forall { r =>
-        val path = r.getSeq[String](1)
-        val levels = Seq(r.getString(2), r.getString(3), r.getString(4))
-        path.lastOption.contains(s"n${r.getString(0)}") &&
+      rows.length == parents.size && rows.forall { r =>
+        val path = Option(r.getSeq[String](1))
+        val levels = Seq(r.getString(3), r.getString(4), r.getString(5))
+        path == want(r.getString(0).toLong) &&
+          Option(r.getString(2)) == path.map(_.mkString(" / ")) &&
           levels.zipWithIndex.forall { case (l, i) =>
-            l == path.lift(i).getOrElse("")
+            l == path.flatMap(_.lift(i)).getOrElse("")
           }
       }
     }
