@@ -1,9 +1,15 @@
 package graft
 
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.Await
+import scala.concurrent.duration._
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -30,12 +36,25 @@ import graft.sources.{BigQuerySink, FileSink, Sink, TimeCampClient, TimeCampConf
   * breadcrumbs + level columns + users/perms drop; users get settings
   * enrichment + primary-group breadcrumbs; activities fan out per
   * (user, ≤20-date chunk) with skip-and-continue; application_names get
-  * the name-fallback chain + category decode.
+  * the name-fallback chain + category decode. The independent datasets
+  * are written concurrently, each chain once: the row counts `run`
+  * returns are observed on the writes, not counted afterwards.
   */
 object PipelineMain {
 
   val AvailableDatasets: Seq[String] =
     Seq("entries", "tasks", "computer_activities", "users", "application_names")
+
+  /** The activity datasets, in chain order: application names are looked
+    * up from the activities, so they run one after the other.
+    */
+  private val ActivityDatasets = Seq("computer_activities", "application_names")
+
+  /** Name prefix of the threads `run` writes the datasets on. */
+  private[graft] val PoolThreadPrefix = "graft-pipeline-"
+
+  /** How long `run` waits after a write for its observed row count. */
+  private val ObservedRowsWait = 10.seconds
 
   /** Bucket-distribution key per dataset: `--sink bucketed` buckets each
     * table on its key so later joins/dedups on it are shuffle-free. For
@@ -432,41 +451,90 @@ object PipelineMain {
     // application_names (the reference preloads them once, `:447-454`),
     // and their user fan-out is the ENABLED user list derived from the
     // users endpoint (`:440-445`) — a hardcoded id list would silently
-    // drop every other user's activities on a real transport
-    // one users build per run: the frame feeds both the 'users' dataset
-    // and the enabled-user fan-out — a second buildUsers would re-fetch
-    // /users, the batched /user/{ids}/setting calls, and /people_picker
-    // from the rate-limited API and re-run the whole enrichment chain
-    lazy val usersFrame = buildUsers(spark, transport)
+    // drop every other user's activities on a real transport.
+    // One users build per run: a second buildUsers would re-fetch /users,
+    // the batched /user/{ids}/setting calls and /people_picker from the
+    // rate-limited API. When both the 'users' write and the enabled-id
+    // collect read the frame, it is cached: the collect evaluates the
+    // enrichment chain once and the write reads its blocks.
+    val datasets = c.datasets.distinct
+    val usesActivities = datasets.exists(ActivityDatasets.contains)
+    val cached = new ConcurrentLinkedQueue[DataFrame]()
+    def cachedForReuse(df: DataFrame): DataFrame = { cached.add(df); df.cache() }
+    // memoized with its failure: two chains wait on it, and a failed lazy
+    // val would be re-run by the second, fetching the API again
+    lazy val usersBuilt = Try {
+      val users = buildUsers(spark, transport)
+      if (usesActivities && datasets.contains("users")) cachedForReuse(users)
+      else users
+    }
+    def usersFrame = usersBuilt.get
     lazy val activeUserIds = usersFrame
       .where(col("is_enabled")).select("user_id")
       .collect().map(_.getString(0)).toSeq.sorted
-    lazy val activities = buildActivities(spark, transport, from, to,
-      userIds = activeUserIds).cache()
-    val usesActivities = c.datasets
-      .exists(d => d == "computer_activities" || d == "application_names")
+    lazy val activities = cachedForReuse(buildActivities(spark, transport,
+      from, to, userIds = activeUserIds))
 
-    val out = c.datasets.map { ds =>
+    // one write per dataset; its row count is observed on that write, so
+    // the transform chain runs once and no count action follows it
+    def write(ds: String): Long = {
       val df = ds match {
         case "entries" => buildEntries(spark, transport, from, to)
         case "tasks" => buildTasks(spark, transport)
-        case "users" => usersFrame
+        case "users" =>
+          // the enabled-id collect fills the cache before the write reads it
+          if (usesActivities) activeUserIds
+          usersFrame
         case "computer_activities" => activities
         case "application_names" =>
           buildApplicationNames(spark, transport, activities)
       }
-      // cache around write+count: without it the full transform chain
-      // (dedup groupBys, breadcrumb closure, enrichment joins) executes
-      // twice per dataset — once for the write, once for the count
-      val shared = ds == "computer_activities"
-      val work = if (shared) df else df.cache()
-      sink.write(work, c.output, ds, sinkFormat)
-      val n = work.count()
-      if (!shared) work.unpersist()
-      ds -> n
-    }.toMap
-    if (usesActivities) { activities.unpersist(); () }
-    out
+      val rows = Observation()
+      sink.write(df.observe(rows, count(lit(1)).as("rows")), c.output, ds,
+        sinkFormat)
+      // observed metrics arrive through the listener bus after the write's
+      // query ends; a sink that never executed the frame delivers none
+      try Await.result(rows.future, ObservedRowsWait).getLong(0) catch {
+        case _: TimeoutException => throw new IllegalStateException(
+          s"sink returned without writing table '$ds': no row count " +
+            s"observed within $ObservedRowsWait (Sink.write must execute " +
+            "the frame it is given)")
+      }
+    }
+    // a chain stops at its first failure
+    def runChain(chain: List[String]): List[(String, Try[Long])] = chain match {
+      case ds :: rest =>
+        val r = try Success(write(ds)) catch { case e: Throwable => Failure(e) }
+        (ds -> r) :: (if (r.isSuccess) runChain(rest) else Nil)
+      case Nil => Nil
+    }
+
+    // The independent chains run concurrently: entries, tasks, users, and
+    // computer_activities → application_names (the names are looked up
+    // from the cached activities). The activities wait for the enabled ids
+    // through the lazy vals above, so the users write overlaps them.
+    val chains = datasets.filterNot(ActivityDatasets.contains).map(List(_)) ++
+      Some(ActivityDatasets.filter(datasets.contains).toList).filter(_.nonEmpty)
+    val threadIds = new AtomicInteger()
+    val pool = Executors.newFixedThreadPool(chains.size, (r: Runnable) => {
+      val t = new Thread(r, PoolThreadPrefix + threadIds.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pending = chains.map(chain => pool.submit[List[(String, Try[Long])]](
+        () => runChain(chain)))
+      // every chain finishes before the first failure, in dataset order,
+      // is rethrown as it was thrown
+      val results = pending.flatMap(_.get()).toMap
+      datasets.flatMap(results.get).collectFirst { case Failure(e) => e }
+        .foreach(e => throw e)
+      datasets.map(ds => ds -> results(ds).get).toMap
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+      cached.forEach(_.unpersist())
+    }
   }
 
   def main(args: Array[String]): Unit = {

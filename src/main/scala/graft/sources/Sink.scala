@@ -8,6 +8,14 @@ import org.apache.spark.sql.DataFrame
   * sinks, a `project.dataset` pair for warehouse sinks. `table` is the
   * dataset name (`entries`, `tasks`, ...), `format` the payload format
   * (`csv`/`jsonl`/`parquet` for files, [[BigQuerySink.Format]] for BQ).
+  *
+  * Two duties every implementation keeps:
+  *  - `write` may be called concurrently for distinct tables
+  *    (`PipelineMain.run` writes its independent datasets from several
+  *    threads), so it shares no mutable state between tables;
+  *  - `write` executes the frame it is given before it returns: the
+  *    caller reads the frame's row count from metrics observed during
+  *    that execution, and fails the run naming the table if none arrive.
   */
 trait Sink {
   def write(df: DataFrame, target: String, table: String, format: String): Unit

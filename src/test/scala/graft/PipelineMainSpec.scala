@@ -1,8 +1,15 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.sources.{BigQuerySink, TimeCampClient}
 
 class PipelineMainSpec extends SparkSpec {
   import spark.implicits._
@@ -73,6 +80,118 @@ class PipelineMainSpec extends SparkSpec {
     assert(cats("1002") === "Developer Tools")
   }
 
+  /** Actions (function name, logical plan) of `body`'s queries on this
+    * session. Listener delivery is asynchronous but in order, so a
+    * sentinel query before and after `body` frames exactly its actions.
+    */
+  private def actionsOf[T](body: => T): (T, Seq[(String, String)]) = {
+    val seen = new ConcurrentLinkedQueue[(String, String)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, d: Long): Unit =
+        seen.add(f -> qe.logical.toString)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(s"failed:$f" -> qe.logical.toString)
+    }
+    def sentinel(tag: String): Unit = {
+      spark.range(1).select(lit(tag)).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.asScala.exists(_._2.contains(tag)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(seen.asScala.exists(_._2.contains(tag)), s"no $tag event")
+    }
+    spark.listenerManager.register(listener)
+    try {
+      sentinel("actions_begin")
+      val out = body
+      sentinel("actions_end")
+      (out, seen.asScala.toSeq.dropWhile(!_._2.contains("actions_begin"))
+        .drop(1).takeWhile(!_._2.contains("actions_end")))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("each dataset's chain runs once: no count action, exactly one " +
+    "write command per dataset, counts observed on the writes") {
+    val out = Files.createTempDirectory("pipe").toString
+    val (counts, actions) = actionsOf(PipelineMain.run(spark,
+      cfg(out, PipelineMain.AvailableDatasets)))
+    val funcs = actions.map(_._1)
+    assert(!funcs.contains("count"), funcs)
+    assert(!funcs.exists(_.startsWith("failed:")), funcs)
+    val writes = actions.filter(_._1 == "command")
+    assert(writes.size === PipelineMain.AvailableDatasets.size, funcs)
+    PipelineMain.AvailableDatasets.foreach { ds =>
+      // FileSink writes each table to its own `_tmp_{table}` directory
+      assert(writes.count(_._2.contains(s"_tmp_$ds")) === 1, ds)
+    }
+    // the counts of "full pipeline run", now read from the observed writes
+    val apps = graft.sources.FileSink.read(spark, out, "application_names", "jsonl")
+    assert(counts === Map("entries" -> 5L, "tasks" -> 3L, "users" -> 2L,
+      "computer_activities" -> 3L, "application_names" -> apps.count()))
+  }
+
+  test("a dataset with no rows counts 0 from its observed write") {
+    PipelineMain.registerTransport("stub-no-activities", (url, params) =>
+      if (url == "/computer_activities") TimeCampClient.Response(200, "[]")
+      else PipelineMain.stubTransport(url, params))
+    val out = Files.createTempDirectory("pipe").toString
+    val counts = PipelineMain.run(spark, cfg(out,
+      Seq("computer_activities", "application_names", "users"))
+      .copy(transportKey = "stub-no-activities"))
+    assert(counts === Map("computer_activities" -> 0L,
+      "application_names" -> 0L, "users" -> 2L))
+  }
+
+  test("a sink that returns without executing its frame fails run within " +
+    "seconds, naming the table") {
+    val idle = BigQuerySink(saver = (_, _, _) => ())
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException] {
+      PipelineMain.run(spark, cfg("proj.analytics", Seq("tasks"))
+        .copy(sink = "bigquery"), sinkOverride = Some(idle))
+    }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    assert(e.getMessage.contains("without writing table 'tasks'"), e.getMessage)
+    assert(seconds < 30, s"took $seconds s")
+  }
+
+  test("a failing chain fails run with its own error, unwrapped, and no " +
+    "pipeline thread outlives run") {
+    PipelineMain.registerTransport("stub-404-tasks", (url, params) =>
+      if (url == "/tasks") TimeCampClient.Response(404, "not found")
+      else PipelineMain.stubTransport(url, params))
+    val out = Files.createTempDirectory("pipe").toString
+    val e = intercept[RuntimeException] {
+      PipelineMain.run(spark, cfg(out, PipelineMain.AvailableDatasets)
+        .copy(transportKey = "stub-404-tasks"))
+    }
+    assert(e.getClass === classOf[RuntimeException])
+    assert(e.getMessage === "HTTP 404 after retries: /tasks")
+    // run awaits the pool's termination; a worker that has finished its
+    // last task still takes a moment to exit
+    def alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(PipelineMain.PoolThreadPrefix))
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (alive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(alive.isEmpty, alive.map(_.getName))
+  }
+
+  test("a failing users endpoint is fetched once although two chains " +
+    "read the users") {
+    val requests = new java.util.concurrent.atomic.AtomicInteger()
+    PipelineMain.registerTransport("stub-404-users", (url, params) =>
+      if (url == "/users") {
+        requests.incrementAndGet()
+        TimeCampClient.Response(404, "not found")
+      } else PipelineMain.stubTransport(url, params))
+    val out = Files.createTempDirectory("pipe").toString
+    val e = intercept[RuntimeException] {
+      PipelineMain.run(spark, cfg(out, Seq("users", "computer_activities"))
+        .copy(transportKey = "stub-404-users"))
+    }
+    assert(e.getMessage === "HTTP 404 after retries: /users")
+    assert(requests.get === 1)
+  }
+
   test("TimeCampConfig.fromEnv: reference defaults and env precedence") {
     import graft.sources.TimeCampConfig
     val missing = java.nio.file.Paths.get("/nonexistent/.env")
@@ -100,16 +219,17 @@ class PipelineMainSpec extends SparkSpec {
   }
 
   test("--sink bigquery routes every dataset through the BigQuery sink") {
-    import graft.sources.BigQuerySink
-    var written = Vector.empty[(String, Long)]
+    // the datasets are written concurrently: the saver may run on two
+    // threads at once
+    val written = new ConcurrentLinkedQueue[(String, Long)]()
     val bq = BigQuerySink(saver = (df, opts, mode) => {
       assert(mode === "overwrite")
-      written :+= (opts("table") -> df.count())
+      written.add(opts("table") -> df.count())
     })
     val counts = PipelineMain.run(spark,
       cfg("proj.analytics", Seq("entries", "tasks")).copy(sink = "bigquery"),
       sinkOverride = Some(bq))
-    assert(written.toMap === Map(
+    assert(written.asScala.toMap === Map(
       "proj.analytics.entries" -> 5L, "proj.analytics.tasks" -> 3L))
     assert(counts === Map("entries" -> 5L, "tasks" -> 3L))
     // unknown sink is rejected with the available list

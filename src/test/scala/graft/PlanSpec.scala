@@ -315,12 +315,13 @@ class PlanSpec extends SparkSpec {
           System.nanoTime() < deadline) Thread.sleep(50)
       val foldJobs = jobGroups.toArray
         .takeWhile(_ != "curinc_jobs_sentinel").length
-      // measured 117 at sf0.001 under AQE (each exchange/broadcast stage
-      // is its own job); the retired dispatch added ~16 (one count + one
-      // sampling collect per hinted frame, 8 frames) — the bound sits
-      // between the two. A legitimate plan change that crosses it should
-      // re-baseline CONSCIOUSLY, with this arithmetic in hand.
-      val bound = 126
+      // measured 74 at sf0.001 under AQE (each exchange/broadcast stage
+      // is its own job; 72 before the cap gate's two width samples); the
+      // retired dispatch added ~16 (one count + one sampling collect per
+      // hinted frame, 8 frames), i.e. ~90. The bound is 74 + 8 = 82,
+      // half-way between the two. A legitimate plan change that crosses
+      // it should re-baseline CONSCIOUSLY, with this arithmetic in hand.
+      val bound = 82
       assert(foldJobs <= bound,
         s"one curateIncremental fold launched $foldJobs jobs (> $bound): " +
           "a per-frame count/sampling probe crept back into the " +
