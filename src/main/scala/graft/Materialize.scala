@@ -146,8 +146,12 @@ object Materialize {
     * are genuinely conflicting config — checkpoint dirs are per-context
     * state; each push then flips the dir, so configure one DirKey per
     * context. getCheckpointDir is a local getter; per-call cost is nil.)
+    * Synchronized: two driver threads materializing at once (curation's
+    * decontamination branch beside its near-dup chain) would otherwise
+    * both see no seam-set dir and push one each.
     */
-  private def ensureReliableDir(spark: org.apache.spark.sql.SparkSession): Unit = {
+  private def ensureReliableDir(
+      spark: org.apache.spark.sql.SparkSession): Unit = synchronized {
     val sc = spark.sparkContext
     spark.conf.getOption(DirKey) match {
       case Some(dir) =>

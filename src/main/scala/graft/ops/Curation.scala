@@ -1,5 +1,10 @@
 package graft.ops
 
+import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.util.{Failure, Success, Try}
+
 import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -16,7 +21,15 @@ import org.apache.spark.sql.types._
   *      + near-dup keep-best    (minhash-LSH pairs → connected
   *                               components → best-quality keeper)
   *   3. benchmark decontamination ([[Text.winnowDecontaminate]],
-  *                               Schleimer et al. 2003 winnowing)
+  *                               Schleimer et al. 2003 winnowing) —
+  *                               the contaminated ids are computed
+  *                               over stage 2a's output on a second
+  *                               driver thread while near-dup
+  *                               resolution runs: whether a doc shares
+  *                               a fingerprint with the benchmark
+  *                               depends on its own text alone, so
+  *                               dropping them from the near-dup
+  *                               survivors drops the same set
   *   4. perplexity tail drop    ([[Text.bigramLogProb]] +
   *                               [[Text.pplBucket]], Wenzek et al. 2020)
   *   5. per-source cap          ([[Text.capPerGroup]])
@@ -183,6 +196,12 @@ object Curation {
       s"curateStaged: the sink must bucket on '$idCol' (the join key of " +
         s"every stage boundary), got ${sink.bucketCols}")
     val spark = corpus.sparkSession
+    // the id SIDES of the boundary joins persist through the same
+    // bucket spec — co-location needs BOTH sides hash-partitioned
+    val ids = (df: DataFrame, stage: String) => {
+      sink.write(df, target, s"ids_$stage", "parquet")
+      sink.read(spark, target, s"ids_$stage")
+    }
     chain(corpus, benchmark, idCol, textCol, sourceCol, pplBuckets,
       dropTailBuckets, capPerSource, numShards, semantic,
       mat = (df, stage) => {
@@ -191,12 +210,7 @@ object Curation {
           target, s"stage_$stage", "parquet")
         sink.read(spark, target, s"stage_$stage")
       },
-      // the id SIDES of the boundary joins persist through the same
-      // bucket spec — co-location needs BOTH sides hash-partitioned
-      matIds = (df, stage) => {
-        sink.write(df, target, s"ids_$stage", "parquet")
-        sink.read(spark, target, s"ids_$stage")
-      })
+      matIds = ids, matBranch = ids)
   }
 
   /** Per-document audit of the batch chain: WHY did each corpus doc
@@ -275,12 +289,42 @@ object Curation {
     )).reduce(_.unionByName(_))
   }
 
+  /** Name prefix of the thread [[chain]] runs its decontamination
+    * branch on.
+    */
+  private[graft] val BranchThreadPrefix = "graft-curate-"
+  private val branchThreads = new AtomicInteger()
+
+  /** Run `branch` on a fresh daemon thread while `main` runs on the
+    * calling thread, and return both results. The thread lives for this
+    * call only: it is shut down and awaited before returning. A failure
+    * is rethrown as it was thrown, `main`'s first.
+    */
+  private def beside[A, B](branch: => B)(main: => A): (A, B) = {
+    val pool = Executors.newSingleThreadExecutor((r: Runnable) => {
+      val t = new Thread(r, BranchThreadPrefix + branchThreads.incrementAndGet())
+      t.setDaemon(true)
+      t
+    })
+    try {
+      val pending = pool.submit[Try[B]](() =>
+        try Success(branch) catch { case e: Throwable => Failure(e) })
+      val a = main
+      (a, pending.get().get)
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(1, TimeUnit.MINUTES)
+    }
+  }
+
   /** The shared stage chain behind [[curate]] (checkpoint seam) and
     * [[curateStaged]] (bucketed-parquet seam). `mat` materializes a
     * multi-consumer stage frame; `matIds` materializes the id-set side
     * of a boundary join (identity at the checkpoint seam — those sets
     * ride broadcast there; bucketed at the persisted seam so the join
-    * is co-located on both sides).
+    * is co-located on both sides). `matBranch` is `matIds` for the id
+    * set the decontamination branch builds on its own thread, so it
+    * must be eager at either seam.
     */
   private def chain(
       corpusIn: DataFrame, benchmarkIn: DataFrame, idCol: String,
@@ -289,6 +333,8 @@ object Curation {
       semantic: Option[Semantic],
       mat: (DataFrame, String) => DataFrame,
       matIds: (DataFrame, String) => DataFrame = (df, _) => df,
+      matBranch: (DataFrame, String) => DataFrame =
+        (df, _) => Materialize.checkpoint(df),
       tapBoundary: (String, DataFrame) => Unit = (_, _) => (),
       classifier: Option[Classifier] = None,
       canonicalize: Boolean = false): DataFrame = {
@@ -353,26 +399,36 @@ object Curation {
         Seq("_digest"), Seq(col(idCol))).drop("_digest"), "exact"))
     tapBoundary("exact", exact)
 
-    // 2b. near-dup resolution: banded minhash candidates (never
-    // all-pairs) → connected components → highest-quality keeper per
-    // cluster (partial-aggregable struct-min, no window)
-    val best = step("near_dup")(matIds(Dedup.keepBestPerCluster(
-        exact, idCol, Text.qualityScore(col(textCol)),
-        Dedup.connectedComponents(
-          Dedup.minhashCandidatePairs(exact, idCol, textCol)))
-      .where(col("keep"))
-      .select(col("doc_id").as(idCol)), "best"))
-    val deduped = step("deduped")(mat(
-      exact.join(best, Seq(idCol), "left_semi"), "deduped"))
+    // 2b + 3 run side by side. 3 is span-level decontamination: any doc
+    // sharing a winnowed fingerprint with the benchmark drops (n_hits
+    // >= 1 by the operator's output contract); benchmark fingerprints
+    // broadcast, the corpus pays one map-side winnow pass. A doc's
+    // verdict depends on its own text alone (semi-join on fingerprint,
+    // then group by doc), so the contaminated ids are computed over
+    // `exact`, the input of 2b, on a second driver thread:
+    // deduped ⊆ exact, hence `deduped ⋉̸ contaminated` drops exactly
+    // deduped's contaminated docs, whichever frame the ids were
+    // computed over, and the funnel counts and curateProvenance's
+    // reasons follow. The branch materializes
+    // its ids eagerly (`matBranch`) so its jobs finish on its own
+    // thread, under its own `curate/winnow` label; `clean` waits.
+    val (deduped, contaminated) = beside(step("winnow")(matBranch(
+      Text.winnowDecontaminate(exact, idCol, textCol, benchmark0)
+        .select(col("doc_id").as(idCol)), "contaminated"))) {
+      // 2b. near-dup resolution: banded minhash candidates (never
+      // all-pairs) → connected components → highest-quality keeper per
+      // cluster (partial-aggregable struct-min, no window)
+      val best = step("near_dup")(matIds(Dedup.keepBestPerCluster(
+          exact, idCol, Text.qualityScore(col(textCol)),
+          Dedup.connectedComponents(
+            Dedup.minhashCandidatePairs(exact, idCol, textCol)))
+        .where(col("keep"))
+        .select(col("doc_id").as(idCol)), "best"))
+      step("deduped")(mat(
+        exact.join(best, Seq(idCol), "left_semi"), "deduped"))
+    }
     tapBoundary("deduped", deduped)
 
-    // 3. span-level decontamination: any doc sharing a winnowed
-    // fingerprint with the benchmark drops (n_hits >= 1 by the
-    // operator's output contract); benchmark fingerprints broadcast,
-    // the corpus pays one map-side winnow pass
-    val contaminated = step("winnow")(matIds(
-      Text.winnowDecontaminate(deduped, idCol, textCol, benchmark0)
-        .select(col("doc_id").as(idCol)), "contaminated"))
     val clean = step("clean")(mat(
       deduped.join(contaminated, Seq(idCol), "left_anti"), "clean"))
     tapBoundary("clean", clean)
@@ -680,12 +736,12 @@ object Curation {
         val (sc, nSc) = Materialize.checkpointCounted(
           Text.bigramLogProbAgainst(screened, idCol, textCol, lm))
         if (nSc == 0L) (None, sc)
-        // lazy: the thresholds' first consumer (pplBucketAgainst's
-        // params probe in ppl_band) aggregates the whole frame — it IS
-        // the forcing job, so the bootstrap sheds one dedicated action
-        // (VERDICT r17 item 2: pipeline the 3-action bootstrap)
-        else (Some(PplModel(lm,
-          Materialize.checkpointLazy(Text.pplThresholds(sc, pplBuckets)))), sc)
+        // the thresholds are checkpointed lazily: their first consumer
+        // (the band broadcast in ppl_band's counted checkpoint)
+        // aggregates the whole frame — it IS the forcing job, so the
+        // bootstrap sheds one dedicated action (VERDICT r17 item 2:
+        // pipeline the 3-action bootstrap)
+        else (Some(PplModel(lm, Text.pplThresholds(sc, pplBuckets))), sc)
     })
     val (headIds, nHeadIds) = step("ppl_band")(model match {
       case Some(m) => Materialize.checkpointCounted(

@@ -2,7 +2,10 @@ package graft.ops
 
 import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
+import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Deduplication operators for a training-data pipeline.
   *
@@ -210,7 +213,10 @@ object Dedup {
     * shingle tagging accepts a probe deriving "mh:h8:r2:sh3" — the
     * recorded axes agree; the unrecorded one stays the caller's
     * contract). Pre-column stores and null-params rows (mergeSchema
-    * legacy mixes) are tolerated. The check samples ONE non-null row —
+    * legacy mixes) are tolerated. A store stamped in this session
+    * carries its value in its plan ([[stampedParams]]) and, when that
+    * value is compatible, costs no job. Otherwise the check samples ONE
+    * non-null row —
     * sound under the documented single-writer lifecycle where every
     * appended ingest was itself probe-guarded before the append; a
     * store corrupted by unguarded mixed-parameter appends is beyond a
@@ -247,9 +253,28 @@ object Dedup {
   private def paramsCompatible(got: String, want: String): Boolean =
     got == want || got.startsWith(want + ":") || want.startsWith(got + ":")
 
+  /** The `_params` value of a store stamped in this session — a
+    * `withColumn("_params", lit(...))` over its checkpoint, which the
+    * optimized plan keeps as a top `Project` aliasing a non-null string
+    * literal. None for any other shape (a parquet re-read, a union of
+    * stores), which the guard must sample instead.
+    */
+  private def stampedParams(store: DataFrame): Option[String] =
+    store.queryExecution.optimizedPlan match {
+      case Project(list, _) => list.collectFirst {
+        case Alias(Literal(v, StringType), "_params") if v != null =>
+          v.toString
+      }
+      case _ => None
+    }
+
   private[ops] def requireStoreParams(
       store: DataFrame, want: String, what: String): Unit =
-    if (store.columns.contains("_params")) {
+    // a compatible in-session stamp needs no job; every other store
+    // (and an incompatible stamp, so it fails with the error below) is
+    // sampled
+    if (store.columns.contains("_params") &&
+        !stampedParams(store).exists(paramsCompatible(_, want))) {
       val key = storeContentKey(store).map((_, want))
       if (key.forall(k => !storeParamsChecked.contains(k))) {
         store.select(col("_params")).where(col("_params").isNotNull)
@@ -1126,7 +1151,8 @@ object Dedup {
     * (label-prop, star, incremental): a NULL id never appears in a
     * labeling (null is not an id), a NON-NULL id always does —
     * self-labeled when its only pair had a corrupt partner. Callers
-    * first materialize the raw pair frame ONCE ([[rawPairFrame]]), then
+    * first materialize the raw pair frame ONCE ([[rawPairFrame]]; label
+    * propagation takes the counted form of the same checkpoint), then
     * derive both the merge-edge set ([[nonNullPairs]]) and the
     * observed-id set ([[nonNullEndpoints]]) from that checkpoint, so
     * the (often expensive — minhash/verify chains) upstream pair
@@ -1277,51 +1303,65 @@ object Dedup {
   private[ops] def labelPropagation(
       pairs: DataFrame, maxRounds: Int): (DataFrame, Boolean, DataFrame) = {
     // One materialization of the (often expensive — minhash/verify
-    // chains) pair derivation; the edge filter, the self-loop node set,
-    // and the returned pair frame all read it. Null handling is the
+    // chains) pair derivation; the size gate, the local solve, the edge
+    // set and the returned pair frame all read it. Null handling is the
     // shared CC contract ([[rawPairFrame]] and friends): without the
     // edge filter this path emits a spurious (null, label) row — the
     // null id forms its own group and adopts its non-null neighbor's
-    // label — and without the separate node set a half-null pair's good
-    // endpoint would vanish where the star pass keeps it.
-    val raw = rawPairFrame(pairs)
+    // label — and without the self-loops a half-null pair's good
+    // endpoint would vanish where the star pass keeps it. Counted
+    // checkpoint: the pair count sizes the local-solve gate below at
+    // zero extra jobs.
+    val (raw, nPairs) = Materialize.checkpointCounted(
+      pairs.select(col("id_a"), col("id_b")))
     val p = nonNullPairs(raw)
     // Symmetrized edges PLUS a self-loop per node (from the UNFILTERED
     // non-null endpoint set, so degenerate-pair survivors stay): one
     // join+agg then gives min over {self} ∪ neighbors — no second join
-    // against the previous labels. Materialized once; every round
-    // reuses it.
+    // against the previous labels. Built lazily: only the distributed
+    // loop materializes it.
     val sym = p.select(col("id_a").as("a"), col("id_b").as("b"))
       .unionByName(p.select(col("id_b").as("a"), col("id_a").as("b")))
-    // counted checkpoint: the edge count sizes the local-solver dispatch
-    // below at zero extra jobs
-    val (edges, nEdges) = Materialize.checkpointCounted(sym
+    val edgeSet = sym
       .unionByName(nonNullEndpoints(raw)
         .select(col("id").as("a"), col("id").as("b")))
-      .distinct())
+      .distinct()
     // Size-gated driver-side solve (the incrementalMergeParts precedent):
     // below the broadcast gates the LABEL table would ride a broadcast
-    // join downstream anyway, and the edge set is within a factor ~2 of
-    // it — so for integral ids the min-union-find runs once on the
-    // collected (already-checkpointed) edges: identical labels (min
-    // reachable id — pinned against the distributed passes in
-    // ComponentsSpec), one collect job where the propagation loop paid
-    // one join+agg+probe action per round. Above the gates, or for
-    // non-integral ids (string ordering differs between JVM and
-    // UTF8String for non-ASCII), the distributed loop runs unchanged.
-    val integralIds = edges.schema.fields.forall(_.dataType match {
+    // join downstream anyway, and the edge set is at most 4 × pairs
+    // rows (both directions plus a self-loop per endpoint) — so for
+    // integral ids the min-union-find runs once on the collected pairs:
+    // identical labels (min reachable id — pinned against the
+    // distributed passes in ComponentsSpec), one collect job where the
+    // propagation loop pays a distinct edge set and one join+agg+probe
+    // action per round. Union-find needs neither edge direction nor
+    // self-loops of paired ids: a full pair is one union, and each
+    // non-null endpoint of a half-null pair enters as a self-loop, so
+    // it is labeled by itself and a null id never appears. Above the
+    // gates, or for non-integral ids (string ordering differs between
+    // JVM and UTF8String for non-ASCII), the distributed loop runs
+    // unchanged.
+    val idType = edgeSet.schema("a").dataType
+    val integralIds = idType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.ShortType |
            org.apache.spark.sql.types.ByteType => true
       case _ => false
-    })
+    }
     if (integralIds && fitsLocalSolve(
-        pairs.sparkSession, nEdges, Joins.staticRowBytes(edges))) {
-      val comp = localMinComponents(edges.collect().map(r =>
-        (r.get(0).asInstanceOf[Number].longValue(),
-          r.get(1).asInstanceOf[Number].longValue())))
-      val idType = edges.schema("a").dataType
+        pairs.sparkSession, 4L * nPairs, Joins.staticRowBytes(edgeSet))) {
+      def id(r: org.apache.spark.sql.Row, i: Int): Option[Long] =
+        if (r.isNullAt(i)) None
+        else Some(r.get(i).asInstanceOf[Number].longValue())
+      val comp = localMinComponents(raw.collect().flatMap { r =>
+        (id(r, 0), id(r, 1)) match {
+          case (Some(a), Some(b)) => Some((a, b))
+          case (Some(a), None) => Some((a, a))
+          case (None, Some(b)) => Some((b, b))
+          case (None, None) => None
+        }
+      })
       def conv(v: Long): Any = idType match {
         case org.apache.spark.sql.types.LongType => v
         case org.apache.spark.sql.types.IntegerType => v.toInt
@@ -1337,6 +1377,8 @@ object Dedup {
             org.apache.spark.sql.Row(conv(k), conv(c)) }).asJava
       return (pairs.sparkSession.createDataFrame(rows, schema), true, p)
     }
+    // every round reuses the edge set: materialized once
+    val edges = Materialize.checkpoint(edgeSet)
     val labels0 = edges.select(col("a").as("id"))
       .distinct()
       .withColumn("component", col("id"))

@@ -710,20 +710,20 @@ object Text {
     // (measured — the dominant cost of the curation chain's stage 4 and
     // of the graded q_ppl_bucket row). Materialize the shared scored
     // frame once and band from the checkpoint; same rows, one pass.
-    // LAZY checkpoints: the thresholds artifact's FIRST consumer is
-    // pplBucketAgainst's _params probe, whose lineage is the percentile
-    // aggregate over ALL of `sc`'s partitions — one job materializes
-    // both checkpoints (the eager form scheduled two dedicated forcing
-    // jobs first). Lazy is safe here precisely because the forcing
-    // action is a full aggregate, never a limit that could compute a
-    // partition subset.
+    // LAZY checkpoints (this one and the thresholds' own): the
+    // thresholds artifact's FIRST consumer is the banding plan's
+    // broadcast build, whose lineage is the percentile aggregate over
+    // ALL of `sc`'s partitions — one job materializes both checkpoints
+    // (the eager form scheduled two dedicated forcing jobs first), and
+    // pplBucketAgainst's _params check reads the in-session stamp from
+    // the plan without a job. Lazy is safe here precisely because the
+    // forcing action is a full aggregate, never a limit that could
+    // compute a partition subset.
     if (sample eq scored) {
       val sc = Materialize.checkpointLazy(scored)
-      pplBucketAgainst(sc,
-        Materialize.checkpointLazy(pplThresholds(sc, buckets)), buckets)
+      pplBucketAgainst(sc, pplThresholds(sc, buckets), buckets)
     } else
-      pplBucketAgainst(scored,
-        Materialize.checkpointLazy(pplThresholds(sample, buckets)), buckets)
+      pplBucketAgainst(scored, pplThresholds(sample, buckets), buckets)
   }
 
   private[graft] def pplThresholdParams(buckets: Int) = s"pplth:b$buckets"
@@ -735,15 +735,18 @@ object Text {
     * batch would drift bands batch-to-batch). 6dp-rounded: the
     * percentile agg interpolates between ranks and raw interpolated
     * doubles are not bit-portable; the q_percentile twin pins round-6
-    * parity for this exact expression.
+    * parity for this exact expression. Checkpointed LAZILY (its first
+    * consumer's job materializes it) and stamped AFTER the checkpoint,
+    * as the other stores are, so the in-session `_params` check runs no
+    * job.
     */
   def pplThresholds(sample: DataFrame, buckets: Int): DataFrame = {
     require(buckets >= 2, s"pplBucket: need >= 2 buckets, got $buckets")
     val ps = (1 until buckets).map(i =>
       (BigDecimal(i) / buckets).toDouble).mkString(", ")
-    sample.agg(
-      expr(s"percentile(logprob, array($ps))").as("_raw"))
-      .select(transform(col("_raw"), t => round(t, 6)).as("_th"))
+    Materialize.checkpointLazy(sample.agg(
+        expr(s"percentile(logprob, array($ps))").as("_raw"))
+      .select(transform(col("_raw"), t => round(t, 6)).as("_th")))
       .withColumn("_params", lit(pplThresholdParams(buckets)))
   }
 

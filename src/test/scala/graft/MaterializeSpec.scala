@@ -160,6 +160,33 @@ class MaterializeSpec extends SparkSpec {
     }
   }
 
+  test("reliable mode: two threads entering the dir handshake at once " +
+    "push the DirKey dir once, and both checkpoints land in it") {
+    withMode(Some("reliable")) {
+      val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-2t").toString
+      spark.conf.set(Materialize.DirKey, dir)
+      val sc = spark.sparkContext
+      // the seam owns the context's dir (or none is set), so the new
+      // DirKey value must be pushed — exactly once, however many
+      // threads checkpoint concurrently
+      if (sc.getCheckpointDir.nonEmpty) Materialize.adoptCurrentDirForTest(sc)
+      val start = new java.util.concurrent.CyclicBarrier(2)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val counts = (1 to 2).map(_ => pool.submit[Long](() => {
+          start.await()
+          Materialize.checkpoint(frame()).count()
+        })).map(_.get())
+        assert(counts === Seq(100L, 100L))
+      } finally pool.shutdown()
+      // setCheckpointDir makes one UUID subdirectory per push
+      val pushes = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isDirectory(_)).count()
+      assert(pushes === 1L, s"$pushes checkpoint dirs pushed under $dir")
+      assert(sc.getCheckpointDir.exists(_.contains("graft-ckpt-2t")))
+    }
+  }
+
   test("an operator built on the seam honors the configured mode end-to-end") {
     // connectedComponents materializes through the seam; under reliable
     // mode its checkpoints land in the configured dir and results are

@@ -283,51 +283,57 @@ class PlanSpec extends SparkSpec {
     val ws = ops.Text.winnowStore(
       docs.where(col("doc_id") < 50), "doc_id", "text")
     val b = docs.where(col("doc_id") >= 50)
-    // Spark 4 job properties carry no callsite, so the pin is the raw
-    // JOB COUNT of one fold against empty stores (suites run
-    // sequentially in the forked test JVM — no foreign jobs interleave).
+    // The pin is the raw JOB COUNT of one fold against empty stores.
     // Each materialization is exactly ONE job (checkpointCounted's
     // forcing count / the eager checkpoint's internal count) plus the
     // plans' own exchange/broadcast jobs; the retired dispatch
     // (`broadcastIfSmall(df, Some(df.count()))`) added one count job per
     // hinted frame and a sampling collect on top — ~10 extra jobs, well
     // past the headroom below.
-    val jobGroups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobGroups.add(Option(js.properties)
-          .map(_.getProperty("spark.jobGroup.id", "")).getOrElse(""))
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val foldJobs = jobsDuring {
       ops.Curation.curateIncremental(
         b, ws, "doc_id", "text", "source",
         ops.Curation.CurationStores.empty(spark, "source"),
         metricsTag = "curinc_jobs")
-      // listener delivery is async but FIFO: run a group-tagged sentinel
-      // action and wait until IT arrives — every fold job precedes it
-      spark.sparkContext.setJobGroup("curinc_jobs_sentinel", "sentinel")
-      try spark.range(1).count()
-      finally spark.sparkContext.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!jobGroups.toArray.exists(_ == "curinc_jobs_sentinel") &&
-          System.nanoTime() < deadline) Thread.sleep(50)
-      val foldJobs = jobGroups.toArray
-        .takeWhile(_ != "curinc_jobs_sentinel").length
-      // measured 74 at sf0.001 under AQE (each exchange/broadcast stage
-      // is its own job; 72 before the cap gate's two width samples); the
-      // retired dispatch added ~16 (one count + one sampling collect per
-      // hinted frame, 8 frames), i.e. ~90. The bound is 74 + 8 = 82,
-      // half-way between the two. A legitimate plan change that crosses
-      // it should re-baseline CONSCIOUSLY, with this arithmetic in hand.
-      val bound = 82
-      assert(foldJobs <= bound,
-        s"one curateIncremental fold launched $foldJobs jobs (> $bound): " +
-          "a per-frame count/sampling probe crept back into the " +
-          "broadcast dispatch")
-      assert(foldJobs > 0, "listener saw no fold jobs — harness broken")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // measured 70 at sf0.001 under AQE (each exchange/broadcast stage
+    // is its own job; 74 while the in-session winnow and ppl-threshold
+    // stores each paid a `_params` probe job, 72 before the cap gate's
+    // two width samples); the retired dispatch added ~16 (one count +
+    // one sampling collect per hinted frame, 8 frames), i.e. ~86. The
+    // bound is 82, set at 74 + 8 and still below that. A legitimate plan change that crosses
+    // it should re-baseline CONSCIOUSLY, with this arithmetic in hand.
+    val bound = 82
+    assert(foldJobs <= bound,
+      s"one curateIncremental fold launched $foldJobs jobs (> $bound): " +
+        "a per-frame count/sampling probe crept back into the " +
+        "broadcast dispatch")
+    assert(foldJobs > 0, "listener saw no fold jobs — harness broken")
+  }
+
+  test("curate runs a bounded number of jobs on the sf0.01 documents: " +
+    "no store-params probe, near-dup components from one collect") {
+    val docs = Tables(spark, "/root/testdata/sf0.01", "documents")
+    val jobs = jobsDuring {
+      ops.Curation.curate(
+        docs.where(col("doc_id") >= 50), docs.where(col("doc_id") < 50),
+        "doc_id", "text", "source").collect()
+    }
+    // measured 40 here, output collect included (44 before: each of
+    // the two in-session stores — the winnow fingerprints and the ppl
+    // thresholds — paid a `_params` probe job, and the near-dup CC ran
+    // an eager pair checkpoint, a checkpointed symmetrized distinct (2
+    // jobs) and a collect where it now runs a counted pair checkpoint
+    // and one collect; the contaminated ids add one checkpoint job on
+    // their branch: 44 − 2 − 3 + 1 = 40). The bound is 40 + 1 = 41, so
+    // the two returning probes (+2) or the pair-side CC jobs (+3) fail
+    // it. A legitimate plan change that crosses it should
+    // re-baseline with this arithmetic in hand.
+    val bound = 41
+    assert(jobs <= bound,
+      s"one curate call launched $jobs jobs (> $bound): a store-params " +
+        "probe or a pair-side CC job crept back")
+    assert(jobs > 0, "listener saw no curate jobs — harness broken")
   }
 
   test("scoreRank keeps the window's rank contract on the edges: NaN " +

@@ -126,6 +126,54 @@ class ComponentsSpec extends SparkSpec {
       (1L to 30L).map(_ -> 1L).toMap)
   }
 
+  test("the local solve labels exactly as the distributed passes on " +
+    "duplicate, two-way, self and half-null pairs") {
+    // nullable long ids: None is a corrupt endpoint the CC null contract
+    // must drop, keeping the pair's good endpoint self-labeled
+    val rnd = new scala.util.Random(7)
+    def endpoint(): Option[Long] =
+      if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(30).toLong)
+    val graphs = Seq(
+      Seq((Some(2L), Some(1L)), (Some(2L), Some(1L)), (Some(1L), Some(2L)),
+        (Some(3L), Some(3L)), (Some(4L), None), (None, Some(5L)),
+        (None, None), (Some(5L), Some(6L)), (Some(6L), Some(5L)))) ++
+      (1 to 4).map(_ => Seq.fill(40)((endpoint(), endpoint())))
+    graphs.foreach { g =>
+      val pairs = g.toDF("id_a", "id_b")
+      val local = Dedup.connectedComponents(pairs)
+        .as[(Long, Long)].collect()
+      // every non-null endpoint labeled once, with its min reachable id
+      val want = Dedup.localMinComponents(g.flatMap {
+        case (Some(a), Some(b)) => Seq((a, b))
+        case (a, b) => (a ++ b).map(x => (x, x))
+      }.toArray)
+      assert(local.toMap === want && local.length === want.size)
+      val star = Dedup.connectedComponentsStar(pairs)
+        .as[(Long, Long)].collect()
+      // above the gates: the distributed propagation loop
+      spark.conf.set(Joins.MaxBroadcastRowsKey, "0")
+      val prop =
+        try Dedup.connectedComponentsLabelProp(pairs).as[(Long, Long)].collect()
+        finally spark.conf.unset(Joins.MaxBroadcastRowsKey)
+      assert(local.sorted.toSeq === star.sorted.toSeq)
+      assert(local.sorted.toSeq === prop.sorted.toSeq)
+    }
+  }
+
+  test("connectedComponents on a small graph runs 2 jobs: the counted " +
+    "pair checkpoint and one collect") {
+    val pairs = Seq((2L, 1L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
+    var labels: Map[Long, Long] = null
+    val jobs = jobsDuring {
+      labels = Dedup.connectedComponents(pairs).as[(Long, Long)]
+        .collect().toMap
+    }
+    assert(labels === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    // the labels come back as a driver-built local frame: collecting
+    // them runs no job, so all that is counted is the CC itself
+    assert(jobs === 2, s"connectedComponents ran $jobs jobs, want 2")
+  }
+
   test("incremental merge takes the distributed star path above the gates " +
       "and still equals from-scratch CC") {
     // force the quotient below-gate fast path OFF by shrinking the row

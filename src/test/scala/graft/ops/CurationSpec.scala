@@ -146,6 +146,54 @@ class CurationSpec extends graft.SparkSpec {
       s"semantic screen must drop 102 only: $ids")
   }
 
+  test("a benchmark whose winnow pass throws fails curate with that " +
+    "exception, unwrapped, and leaves no graft-curate- thread alive") {
+    import scala.jdk.CollectionConverters._
+    val boom = udf((s: String) =>
+      if (s != null) throw new IllegalStateException("winnow-branch-boom")
+      else s)
+    val badBench = bench().withColumn("text", boom(col("text")))
+    // the branch's own job failure, not an ExecutionException around it
+    val e = intercept[org.apache.spark.SparkException] {
+      Curation.curate(corpus(), badBench, "doc_id", "text", "source",
+        pplBuckets = 2, dropTailBuckets = 0, capPerSource = 10, numShards = 2)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("winnow-branch-boom"))),
+      s"unexpected failure: $e")
+    // curate awaits the branch's termination; a worker that has finished
+    // its last task still takes a moment to exit
+    def alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(_.getName.startsWith(Curation.BranchThreadPrefix))
+    val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
+    while (alive.nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(alive.isEmpty, alive.map(_.getName))
+  }
+
+  test("reliable materialization: curate and its provenance match the " +
+    "local seam with the decontamination branch checkpointing beside " +
+    "the near-dup chain") {
+    def run() = (
+      Curation.curate(corpus(), bench(), "doc_id", "text", "source",
+        pplBuckets = 2, dropTailBuckets = 0, capPerSource = 10, numShards = 2)
+        .as[(Long, Long, Long)].collect().toSet,
+      Curation.curateProvenance(corpus(), bench(), "doc_id", "text",
+        "source", pplBuckets = 2, dropTailBuckets = 0, capPerSource = 10,
+        numShards = 2).as[(Long, String)].collect().toSet)
+    val local = run()
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-cur").toString
+    spark.conf.set(graft.Materialize.ModeKey, "reliable")
+    spark.conf.set(graft.Materialize.DirKey, dir)
+    val reliable =
+      try run()
+      finally {
+        spark.conf.unset(graft.Materialize.ModeKey)
+        spark.conf.unset(graft.Materialize.DirKey)
+      }
+    assert(reliable === local)
+    assert(local._2.contains((104L, "contaminated")), local._2)
+  }
+
   test("empty benchmark: decontamination drops nothing") {
     val noBench = Seq.empty[(Long, String)].toDF("doc_id", "text")
     val out = Curation.curate(corpus(), noBench, "doc_id", "text", "source",
