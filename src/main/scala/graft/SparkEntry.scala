@@ -260,11 +260,8 @@ object SparkEntry {
 
     // --- §2.6 recursion ---
     "q_transitive_closure" -> ((s, dir) =>
-      // Native WITH RECURSIVE. Last A/B under Bench's conditions
-      // (suite-warm session, interleaved min-of-3, sf0.1;
-      // OPTIMIZATION_r18.md): 0.772s, against 1.068s for pointer
-      // doubling and 1.143s for the iterative fixpoint, both since
-      // deleted (SCALE.md has the rounds 7-8 history).
+      // The breadcrumb walk over ids, exploded into pairs: one row per
+      // node per round, ⌈log₂ depth⌉ rounds (SCALE.md has the history).
       Closure.transitiveClosure(
         TaskTree.tasks(s, dir), "task_id", "parent_id")),
 

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Materialize
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Recursive-hierarchy operators — the one capability the reference needs
@@ -11,130 +11,52 @@ import org.apache.spark.sql.functions._
   * `SAMPLE-PROJECT-BUDGET-REPORT.md:53-70`) and the Python breadcrumb
   * walkers (`dlt_fetch_timecamp.py:313-346`, `:527-547`).
   *
-  * One algorithm per operator, each the measured winner of its A/B
-  * (SCALE.md): the closure is Spark 4's native `WITH RECURSIVE`, the
-  * reference's own `UNION ALL` shape; breadcrumbs walk by recursive
-  * doubling, ⌈log₂ depth⌉ rounds, each one
-  * [[graft.Materialize.checkpointForced]] whose forcing job is the
-  * convergence count, so the plan stays O(1) per round. Hierarchy dimensions are small (tasks/groups —
-  * thousands to low millions of rows) even when the fact side is 100 TB,
-  * so every round is a dimension-sized join, and the final closure is
-  * typically broadcast against the fact table.
+  * One walker serves both operators: recursive doubling over one row per
+  * node, ⌈log₂ depth⌉ rounds, each one [[graft.Materialize.checkpointForced]]
+  * whose forcing job is the pending count, so the plan stays O(1) per
+  * round. Breadcrumbs walk names; the closure walks ids and explodes each
+  * node's path into its ancestor pairs. It won the breadcrumb A/B against
+  * the recursive CTE at every scale (SCALE.md), and unlike the CTE's
+  * `UNION ALL` it cannot repeat a pair on a cycle. Hierarchy dimensions
+  * are small (tasks/groups — thousands to low millions of rows) even when
+  * the fact side is 100 TB, so every round is a dimension-sized join, and
+  * the closure is typically broadcast against the fact table.
   */
 object Closure {
 
-  /** Spark's recursive CTE guards against runaway recursion with a
-    * 1M-row default cap (`RECURSION_ROW_LIMIT_EXCEEDED`) — sized for
-    * interactive misuse, not ETL: a closure over a 2M-node forest
-    * legitimately emits tens of millions of pairs (hit at sf10 by the
-    * bench's error reporting). Raise the session cap, never lower it —
-    * the depth cap (`cteRecursionLevelLimit`, default 100) stays, it is
-    * the actual cycle guard.
+  /** The recursive-doubling walk over `base` = `(_id, _parent, payload…)`.
+    *
+    * The state is ONE row per node at every round: `(_id, _up, path)`
+    * where `_up` is the ancestor at distance exactly 2^k (NULL once the
+    * path is complete) and `path` holds the last 2^k entries ending at the
+    * node — or, once complete, the whole chain. One self-join per round
+    * composes both: `path ← path(up) ++ path`, `up ← up(up)`. A root, or
+    * a node whose parent id is missing from the table, is complete from
+    * the start with `firstPath(false)`; every other node starts from
+    * `firstPath(true)`.
+    *
+    * Rounds stop once paths hold `entries` entries or nothing is pending;
+    * returns the final state and its pending count. Rows still pending
+    * then are chains deeper than `entries` or nodes that reach a cycle.
     */
-  private def raiseRecursionRowLimit(nodes: DataFrame, maxDepth: Int): Unit = {
-    val conf = nodes.sparkSession.conf
-    val rowKey = "spark.sql.cteRecursionRowLimit"
-    if (conf.getOption(rowKey).map(_.toLong).getOrElse(1000000L) < Int.MaxValue)
-      conf.set(rowKey, Int.MaxValue)
-    // The engine depth guard (default 100) must sit ABOVE the requested
-    // truncation boundary, or the query errors before our own lvl cap
-    // truncates; never lower it (it stays the runaway backstop for
-    // misconfigured caps).
-    val lvlKey = "spark.sql.cteRecursionLevelLimit"
-    val need = maxDepth.toLong + 2
-    if (conf.getOption(lvlKey).map(_.toLong).getOrElse(100L) < need)
-      conf.set(lvlKey, need)
-  }
-
-  /** Transitive closure of a parent-pointer forest via Spark 4's native
-    * recursive CTE (`WITH RECURSIVE` → `UnionLoop`): one query execution,
-    * no driver-side fixpoint loop or per-iteration checkpoints.
-    *
-    * Input: any DataFrame with an id column and a nullable parent column
-    * (NULL parent = root). Output: `(descendant_id, ancestor_id)` pairs
-    * including the reflexive self-pair for every node, exactly as the
-    * reference's base case does (`SAMPLE-REPORTS.md:61-63`).
-    *
-    * `maxDepth` caps the walk: output = pairs at walk distance
-    * ≤ `maxDepth`, truncated by the step's own level column instead of
-    * erroring into the engine recursion limit (which is raised above the
-    * cap when needed and kept as the backstop). Spark only supports the
-    * UNION ALL step form, the reference's own: on cyclic input the level
-    * bound makes the loop terminate and the output is a multiset (one
-    * row per winding); its distinct pairs are the reachable set.
-    */
-  def transitiveClosure(
-      nodes: DataFrame, idCol: String, parentCol: String,
-      maxDepth: Int = 32): DataFrame = {
-    raiseRecursionRowLimit(nodes, maxDepth)
-    val view = s"_graft_closure_${java.util.UUID.randomUUID.toString.replace("-", "")}"
-    // Materialize the projection once: UnionLoop re-executes the step plan
-    // per level, which would otherwise re-run the source scan every level.
-    nodes.select(col(idCol).as("id"), col(parentCol).as("parent"))
-      .transform(Materialize.checkpoint)
-      .createOrReplaceTempView(view)
-    val out = nodes.sparkSession.sql(
-      s"""WITH RECURSIVE th(descendant_id, ancestor_id, lvl) AS (
-         |  SELECT id AS descendant_id, id AS ancestor_id, 0 AS lvl FROM $view
-         |  UNION ALL
-         |  SELECT th.descendant_id, n.parent AS ancestor_id, th.lvl + 1
-         |  FROM th JOIN $view n ON th.ancestor_id = n.id
-         |  WHERE n.parent IS NOT NULL AND th.lvl < $maxDepth
-         |) SELECT descendant_id, ancestor_id FROM th""".stripMargin)
-    // views resolve during analysis (spark.sql above), so the returned
-    // plan no longer needs the catalog entry — dropping it immediately
-    // keeps a per-job caller from accumulating one pinned checkpointed
-    // frame per call for the session's lifetime
-    nodes.sparkSession.catalog.dropTempView(view)
-    out
-  }
-
-  /** Root-to-self breadcrumb paths for a parent-pointer forest.
-    *
-    * Returns the input columns plus:
-    *  - `path`: ArrayType(String) of names, root first, self last
-    *  - `breadcrumb`: `" / "`-joined path (`dlt_fetch_timecamp.py:559-561`)
-    *
-    * Recursive doubling: the state is ONE row per node at every round —
-    * `(id, up, path)` where `up` is the ancestor at distance exactly 2^k
-    * (NULL once the root is within reach) and `path` holds the last
-    * min(2^k, depth+1) names ending at the node. One self-join per round
-    * composes both: `path ← path(up) ++ path`, `up ← up(up)`. So
-    * ⌈log₂(depth)⌉ rounds of n-row joins, where a level walker needs
-    * `depth` rounds and materializes a frontier per level.
-    *
-    * Paths cover levels ≤ `maxDepth` (root = level 1; the loop overshoots
-    * to the next power of two, then the emit clamps on `size(path)`), and
-    * deeper nodes emit NULL path/breadcrumb. A node whose parent id does
-    * not exist in the table starts its own path (the reference walker
-    * stops at the missing ancestor, `dlt_fetch_timecamp.py:534`). Nodes
-    * whose ancestor chain enters a cycle still hold a non-NULL `up` when
-    * the round cap fires and are emitted with NULL path/breadcrumb.
-    */
-  def breadcrumbs(
-      nodes: DataFrame,
-      idCol: String,
-      parentCol: String,
-      nameCol: String,
-      maxDepth: Int = 32): DataFrame = {
-    val base = nodes
-      .select(col(idCol).as("_id"), col(parentCol).as("_parent"),
-        col(nameCol).as("_name"))
-      .transform(Materialize.checkpoint)
-    val ids = base.select(col("_id").as("_x"))
+  private def walk(
+      base: DataFrame, firstPath: Column => Column,
+      entries: Int): (DataFrame, Long) = {
+    val nodes = base.transform(Materialize.checkpoint)
+    val ids = nodes.select(col("_id").as("_x"))
     // counted-while-forcing: each round's convergence probe (any rows
     // still walking, i.e. non-null _up?) is the checkpoint's forcing
     // action — one job per round, not checkpoint + isEmpty
     def pending(df: DataFrame): Long =
       df.where(col("_up").isNotNull).queryExecution.toRdd.count()
     var (state, nPending) = Materialize.checkpointForced(
-      base
-        .join(ids, base("_parent") === col("_x"), "left")
+      nodes
+        .join(ids, nodes("_parent") === col("_x"), "left")
         .select(col("_id"),
           when(col("_x").isNotNull, col("_parent")).as("_up"),
-          array(col("_name")).as("path")))(pending)
+          firstPath(col("_x").isNotNull).as("path")))(pending)
     var span = 1L
-    while (span < maxDepth && nPending > 0) {
+    while (span < entries && nPending > 0) {
       val anc = state.select(col("_id").as("_a_id"),
         col("_up").as("_a_up"), col("path").as("_a_path"))
       // `_up` non-null ⇒ the ancestor row exists (pointers are only ever
@@ -151,6 +73,85 @@ object Closure {
       nPending = n
       span *= 2
     }
+    (state, nPending)
+  }
+
+  /** Transitive closure of a parent-pointer forest: the id walk, each
+    * node's path exploded into `(descendant_id, ancestor_id)` pairs.
+    *
+    * Input: any DataFrame with an id column and a nullable parent column
+    * (NULL parent = root). Output: one row per pair, including the
+    * reflexive self-pair for every node, exactly as the reference's base
+    * case does (`SAMPLE-REPORTS.md:61-63`). A parent id missing from the
+    * table is an ancestor whose own walk ends there, as in the
+    * reference's join (node 9 under a missing 404 gives `(9, 404)`).
+    *
+    * `maxDepth` caps the walk: output = pairs at walk distance
+    * ≤ `maxDepth`, so a chain deeper than that is truncated.
+    *
+    * Cycles fail loudly: a node on a parent cycle of at most `maxDepth`
+    * nodes meets its own id among its ancestors, and the call throws an
+    * `IllegalArgumentException` listing up to 10 such ids. (The reference
+    * CTE's `UNION ALL` would instead repeat each cycle pair once per
+    * winding, silently multiplying every sum taken over the closure.) A
+    * longer cycle is truncated at `maxDepth` like a deep chain. The check
+    * is one collect, run only when the walk stopped at the cap with rows
+    * still pending — on a forest within `maxDepth` it costs nothing.
+    * The walk's rounds, and the check, run when this is called; the
+    * returned pairs are a projection of the last checkpointed round.
+    */
+  def transitiveClosure(
+      nodes: DataFrame, idCol: String, parentCol: String,
+      maxDepth: Int = 32): DataFrame = {
+    val entries = maxDepth + 1
+    val (state, nPending) = walk(
+      nodes.select(col(idCol).as("_id"), col(parentCol).as("_parent")),
+      found => when(col("_parent").isNotNull && !found,
+        array(col("_parent"), col("_id"))).otherwise(array(col("_id"))),
+      entries)
+    // the last `entries` ids of the path, self first: position = distance
+    // (reversing first keeps slice's start at 1 — a negative start past
+    // the front of a short array returns an empty array)
+    val chain = slice(reverse(col("path")), 1, entries)
+    if (nPending > 0) {
+      val cyclic = state
+        .where(col("_up").isNotNull &&
+          array_contains(slice(chain, 2, maxDepth), col("_id")))
+        .select(col("_id")).orderBy(col("_id")).limit(10)
+        .collect().map(_.get(0))
+      if (cyclic.nonEmpty) throw new IllegalArgumentException(
+        s"Closure.transitiveClosure: parent cycle in '$parentCol' through " +
+          s"$idCol ${cyclic.mkString(", ")} (at most 10 shown)")
+    }
+    state.select(col("_id").as("descendant_id"), explode(chain).as("ancestor_id"))
+  }
+
+  /** Root-to-self breadcrumb paths for a parent-pointer forest: the name
+    * walk.
+    *
+    * Returns the input columns plus:
+    *  - `path`: ArrayType(String) of names, root first, self last
+    *  - `breadcrumb`: `" / "`-joined path (`dlt_fetch_timecamp.py:559-561`)
+    *
+    * Paths cover levels ≤ `maxDepth` (root = level 1; the loop overshoots
+    * to the next power of two, then the emit clamps on `size(path)`), and
+    * deeper nodes emit NULL path/breadcrumb. A node whose parent id does
+    * not exist in the table starts its own path (the reference walker
+    * stops at the missing ancestor, `dlt_fetch_timecamp.py:534`). Nodes
+    * whose ancestor chain enters a cycle still hold a non-NULL `up` when
+    * the round cap fires and are emitted with NULL path/breadcrumb.
+    */
+  def breadcrumbs(
+      nodes: DataFrame,
+      idCol: String,
+      parentCol: String,
+      nameCol: String,
+      maxDepth: Int = 32): DataFrame = {
+    val (state, _) = walk(
+      nodes.select(col(idCol).as("_id"), col(parentCol).as("_parent"),
+        col(nameCol).as("_name")),
+      _ => array(col("_name")),
+      maxDepth)
     // clamp to the level boundary: completed paths deeper than
     // maxDepth levels (covered because rounds overshoot to a power of
     // two) emit NULL exactly like an uncompleted one

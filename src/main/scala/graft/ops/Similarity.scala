@@ -744,7 +744,7 @@ object Similarity {
       (i, cv, math.sqrt(s))
     }.toDF("_ci", "_cv", "_cn")
       .select(col("_ci"), col("_cv").cast("array<double>"), col("_cn"))
-    val cidArr = array(ordered.map(c => lit(c._1)): _*)
+    val cidArr = modelConst(typedlit(ordered.map(_._1)))
     // k-row broadcast side: this cross join is the centroid-model
     // attachment, the same broadcast-small-side class as the scalar
     // attachments — never corpus × corpus
@@ -893,7 +893,7 @@ object Similarity {
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): Double = {
     val ordered = cents.sortBy(_._1)
-    val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
+    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
     corpus
       .select((lit(1.0) - cosine(col(vecCol),
         element_at(mat,
@@ -944,7 +944,7 @@ object Similarity {
     // first-k pad, which is the only meaningful answer there
     (1 to (if (first.isEmpty) 0 else rounds)).foreach { r =>
       val ordered = cands.sortBy(_._1)
-      val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
+      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
       val scored = clean.select(col("_id"), col("_v"),
         (lit(1.0) - cosine(col("_v"),
           element_at(mat,
@@ -1125,14 +1125,14 @@ object Similarity {
       k: Int = 4): DataFrame = {
     val cents = kmeansFit(corpus, idCol, vecCol, k, iters = 1)
     // native argmax + ONE cosine against the winning centroid (decoded
-    // from the same literal matrix): identical cell/score contract as
+    // from the same model_const matrix): identical cell/score contract as
     // the k-inlined array_max(struct...) formulation this replaces —
     // which blew the codegen method limits past a few dozen centroids
     // (the cellsByLiteral lesson) and priced 2k cosines per row where
     // the law k = ⌈√n⌉ needs k + 1
     val ordered = cents.sortBy(_._1)
-    val mat = array(ordered.map(c => array(c._2.map(lit): _*)): _*)
-    val cidArr = array(ordered.map(c => lit(c._1)): _*)
+    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
+    val cidArr = modelConst(typedlit(ordered.map(_._1)))
     val idx = call_function("vec_argmax_cell", col(vecCol), mat)
     // the score is a DIAGNOSTIC, not an oracle-comparable value: it is
     // a cosine against 6dp-rounded means, and those means are not

@@ -29,12 +29,11 @@ object BudgetReport {
     * @param entries (task_id: String, duration: Long seconds)
     */
   def apply(tasks: DataFrame, entries: DataFrame): DataFrame = {
-    // Recursive-CTE closure: same UNION ALL shape as the published report's
-    // own recursive CTE (SAMPLE-REPORTS.md:59-75) — both assume a forest.
-    // Materialized once before the broadcast: the UnionLoop otherwise
-    // re-runs inside the broadcast-exchange computation, and the
-    // dimension-sized result (|tasks| × depth) is checkpoint-cheap
-    // (measured ~0.4s off the report at sf0.1).
+    // The pairs of the published report's recursive CTE
+    // (SAMPLE-REPORTS.md:59-75), from the doubling walk: ⌈log₂ depth⌉
+    // rounds, each pair once, and a parent cycle raises instead of
+    // inflating tracked_seconds. The dimension-sized pair set
+    // (|tasks| × depth) is materialized once before the broadcast, by a
     // counted checkpoint: the count IS the forcing job, and it feeds the
     // broadcastIfSmall dispatch below (the retired eager-checkpoint +
     // uncounted broadcastIfSmall shape paid a separate count job)

@@ -18,16 +18,16 @@ import org.apache.spark.sql.functions._
 object ProjectBudgetReport {
 
   def apply(tasks: DataFrame, entries: DataFrame): DataFrame = {
-    // The recursion has exactly ONE consumer (the memberOf derivation,
-    // itself materialized below), so it needs no checkpoint of its own:
-    // the UnionLoop executes once, inside memberOf's forcing job. (The
-    // retired eager checkpoint here was one extra action per report.)
+    // The walk checkpoints its own rounds; the pair explode over it has
+    // exactly ONE consumer (the memberOf derivation, itself materialized
+    // below), so it needs no checkpoint of its own. (The retired eager
+    // checkpoint here was one extra action per report.)
     val closure = Closure.transitiveClosure(tasks, "task_id", "parent_id")
     val roots = tasks.where(col("parent_id").isNull)
       .select(col("task_id").as("project_id"), col("name").as("project_name"))
     // descendant → its root ancestor; materialized once — it feeds two
-    // joins (budget + tracked), which would otherwise re-execute the
-    // recursion per consumer. Dimension-sized, so the checkpoint is
+    // joins (budget + tracked), which would otherwise re-run the explode
+    // and the root join per consumer. Dimension-sized, so the checkpoint is
     // cheap; COUNTED, because the count IS the forcing job and feeds the
     // broadcast dispatch (eager checkpoint + a count job was two).
     val (memberOf, nMember) = Materialize.checkpointCounted(closure

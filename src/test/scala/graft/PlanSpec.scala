@@ -336,6 +336,35 @@ class PlanSpec extends SparkSpec {
     assert(jobs > 0, "listener saw no curate jobs — harness broken")
   }
 
+  test("report pair over a 12-level forest runs a bounded job count") {
+    // 20 chains of 12 levels: task k's parent is k - 20
+    val tasks = (1 to 240).map(k => (k.toString,
+      if (k > 20) (k - 20).toString else null, s"t$k", 100L * k))
+      .toDF("task_id", "parent_id", "name", "budgeted")
+    val entries = (1 to 240).flatMap(k => Seq((k.toString, 60L), (k.toString, 30L)))
+      .toDF("task_id", "duration")
+    val jobs = jobsDuring {
+      reports.BudgetReport(tasks, entries).collect()
+      reports.ProjectBudgetReport(tasks, entries).collect()
+    }
+    // measured 62 here. Each report's closure walk is 19 jobs: the base
+    // checkpoint, then round 0 and ⌈log₂ 12⌉ = 4 doubling rounds, each a
+    // counted checkpoint over a join whose exchanges are jobs of their
+    // own. On top, BudgetReport runs 10 (its pair checkpoint, the fact
+    // aggregation, the joins, the sort) and ProjectBudgetReport 14, so
+    // 2 × 19 + 10 + 14 = 62. The recursive CTE this walk replaced ran
+    // one UnionLoop job per level plus its exchanges, 52 jobs per
+    // closure and 126 for the pair. The bound is 62 + 6 = 68: a walk
+    // back at one round per level fails it by far. A legitimate plan
+    // change that crosses it should re-baseline with this arithmetic in
+    // hand.
+    val bound = 68
+    assert(jobs <= bound,
+      s"the report pair launched $jobs jobs (> $bound) over 12 levels: " +
+        "the closure is walking one job per level again")
+    assert(jobs > 0, "listener saw no report jobs — harness broken")
+  }
+
   test("scoreRank keeps the window's rank contract on the edges: NaN " +
     "ranks greatest, NULL scores drop, ties break to the smaller id") {
     import spark.implicits._

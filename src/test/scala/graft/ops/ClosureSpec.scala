@@ -27,6 +27,8 @@ class ClosureSpec extends SparkSpec {
 
   private def forestRows = treeRows.filterNot(r => Set("7", "8")(r._1))
 
+  private def forest = forestRows.toDF("task_id", "parent_id", "name")
+
   private def chainRows(depth: Int) = (1 to depth).map(i =>
     (i.toString, if (i == 1) null else (i - 1).toString, s"n$i"))
 
@@ -52,29 +54,24 @@ class ClosureSpec extends SparkSpec {
   }
 
   test("transitive closure contains all self-pairs (base case)") {
-    val c = Closure.transitiveClosure(tree, "task_id", "parent_id")
-    val selfPairs = c.where($"descendant_id" === $"ancestor_id").distinct().count()
-    assert(selfPairs == 7)
+    val c = Closure.transitiveClosure(forest, "task_id", "parent_id")
+    val selfPairs = c.where($"descendant_id" === $"ancestor_id").count()
+    assert(selfPairs == 5)
   }
 
   test("transitive closure reaches all ancestors") {
-    val c = Closure.transitiveClosure(tree, "task_id", "parent_id")
+    val c = Closure.transitiveClosure(forest, "task_id", "parent_id")
       .where($"descendant_id" === "3").orderBy("ancestor_id")
       .select("ancestor_id").as[String].collect().toSet
     assert(c == Set("1", "2", "3"))
   }
 
-  test("closure on the 7<->8 cycle stops at maxDepth; its distinct pairs " +
-    "are exactly the finite pair set") {
-    val c = closureSet(treeRows, maxDepth = 50)
-    // UNION ALL re-derives the cycle once per winding: levels 0..50 for
-    // each of 7 and 8, then the level bound ends the loop
-    val cyc = c.filter(p => Set("7", "8")(p._1))
-    assert(cyc.length == 2 * 51)
-    assert(cyc.toSet == Set(("7", "7"), ("7", "8"), ("8", "8"), ("8", "7")))
-    // every distinct pair: 7 self + (2,1)(3,2)(3,1)(9,404)(7,8)(8,7)
-    assert(c.toSet.size == 13)
-    assert(c.toSet == ClosureProps.refAncestors(parents(treeRows), 50))
+  test("closure on the 7<->8 cycle fails loudly, naming 7 and 8") {
+    // a closure over a cycle has no finite pair multiset: summing over
+    // one repeated each cycle pair per winding, so the call refuses
+    val e = intercept[IllegalArgumentException](closureSet(treeRows, maxDepth = 50))
+    assert(e.getMessage.contains("Closure.transitiveClosure"), e.getMessage)
+    assert(e.getMessage.contains("task_id 7, 8 "), e.getMessage)
   }
 
   test("breadcrumbs: root-to-self path joined by ' / '") {
@@ -119,22 +116,20 @@ class ClosureSpec extends SparkSpec {
     assert(c.toSet == ClosureProps.refAncestors(parents(forestRows)))
   }
 
-  test("recursive-CTE paths raise the engine's 1M-row recursion cap " +
-    "(an ETL closure legitimately exceeds the interactive default)") {
-    val key = "spark.sql.cteRecursionRowLimit"
-    val before = spark.conf.getOption(key)
+  test("the closure leaves the CTE recursion confs as it found them") {
+    val keys = Seq("spark.sql.cteRecursionRowLimit",
+      "spark.sql.cteRecursionLevelLimit")
+    val before = keys.map(spark.conf.getOption)
     try {
-      spark.conf.set(key, 1000000)
-      Closure.transitiveClosure(
-        tree.where(!$"task_id".isin("7", "8")), "task_id", "parent_id").count()
-      assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
-      // never LOWERED if a session already set it higher than our target
-      spark.conf.set(key, Int.MaxValue)
-      Closure.transitiveClosure(tree, "task_id", "parent_id").count()
-      assert(spark.conf.get(key).toLong === Int.MaxValue.toLong)
-    } finally before match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      // the engine defaults, and a cap above the level limit
+      spark.conf.set(keys(0), 1000000)
+      spark.conf.set(keys(1), 100)
+      Closure.transitiveClosure(chain(10), "task_id", "parent_id",
+        maxDepth = 200).count()
+      assert(keys.map(spark.conf.get) == Seq("1000000", "100"))
+    } finally keys.zip(before).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
@@ -179,10 +174,12 @@ class ClosureSpec extends SparkSpec {
     }
   }
 
-  test("breadcrumbs over a 12-deep chain make at most ceil(log2 12) + 2 = 6 " +
-    "Materialize checkpoints (a level-per-round walker makes 14)") {
-    // every Materialize mode marks through Dataset.localCheckpoint /
-    // checkpoint, eager or lazy, and each mark is one listener action
+  /** The listener actions `body` runs, in order. Every Materialize mode
+    * marks through Dataset.localCheckpoint / checkpoint, eager or lazy,
+    * and each mark is one listener action; a forcing job over the
+    * physical plan (`queryExecution.toRdd`) is none.
+    */
+  private def actionsDuring(body: => Unit): Seq[String] = {
     val funcs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val sentinel = spark.range(1).toDF()
     val listener = new QueryExecutionListener {
@@ -192,7 +189,7 @@ class ClosureSpec extends SparkSpec {
     }
     spark.listenerManager.register(listener)
     try {
-      Closure.breadcrumbs(chain(12), "task_id", "parent_id", "name")
+      body
       // listener delivery is async but FIFO: every operator action
       // arrives before the sentinel's
       sentinel.collect()
@@ -200,10 +197,42 @@ class ClosureSpec extends SparkSpec {
       while (!funcs.contains("sentinel") && System.nanoTime() < deadline)
         Thread.sleep(50)
       assert(funcs.contains("sentinel"), "listener saw no sentinel — harness broken")
-      val marks = funcs.toArray.takeWhile(_ != "sentinel")
-        .count(f => f == "localCheckpoint" || f == "checkpoint")
-      assert(marks > 0, "listener saw no checkpoint — harness broken")
-      assert(marks <= 6, s"breadcrumbs made $marks checkpoints on a 12-deep chain")
+      funcs.toArray(Array.empty[String]).toSeq.takeWhile(_ != "sentinel")
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  private def isMark(f: String) = f == "localCheckpoint" || f == "checkpoint"
+
+  test("breadcrumbs over a 12-deep chain make at most ceil(log2 12) + 2 = 6 " +
+    "Materialize checkpoints (a level-per-round walker makes 14)") {
+    val marks = actionsDuring {
+      Closure.breadcrumbs(chain(12), "task_id", "parent_id", "name")
+    }.count(isMark)
+    assert(marks > 0, "listener saw no checkpoint — harness broken")
+    assert(marks <= 6, s"breadcrumbs made $marks checkpoints on a 12-deep chain")
+  }
+
+  test("closure over a 12-deep chain makes at most 6 checkpoints") {
+    // ceil(log2 12) + 2: the base projection, round 0, then 4 doubling
+    // rounds (a level-per-round walker makes 14)
+    val marks = actionsDuring {
+      Closure.transitiveClosure(chain(12), "task_id", "parent_id")
+    }.count(isMark)
+    assert(marks > 0, "listener saw no checkpoint — harness broken")
+    assert(marks <= 6, s"the closure made $marks checkpoints on a 12-deep chain")
+  }
+
+  test("on a forest the closure runs no action beyond checkpoints") {
+    // every path completes, so the cycle check's collect never runs
+    val onForest = actionsDuring {
+      Closure.transitiveClosure(chain(12), "task_id", "parent_id")
+    }
+    assert(onForest.nonEmpty && onForest.forall(isMark), onForest.toString)
+    // control: a chain deeper than the cap stops with pending rows, so
+    // the check runs — one action that is not a checkpoint
+    val capped = actionsDuring {
+      Closure.transitiveClosure(chain(12), "task_id", "parent_id", maxDepth = 3)
+    }
+    assert(capped.count(f => !isMark(f)) == 1, capped.toString)
   }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Properties, Test}
-import org.scalacheck.Prop.forAll
+import org.scalacheck.Prop.{forAll, propBoolean}
 
 import graft.SparkSpec
 
@@ -62,6 +62,19 @@ object ClosureProps extends Properties("graft") {
         .map { case (a, _) => id -> a.get }.toSet
     }
 
+  /** Whether the reference walk from some node, capped at `maxDepth`
+    * steps, visits an id twice: true exactly when the map has a parent
+    * cycle of at most `maxDepth` nodes.
+    */
+  private[ops] def refRevisits[K](
+      parents: Map[K, Option[K]], maxDepth: Int): Boolean =
+    parents.keySet.exists { id =>
+      val walk = Iterator.iterate(Option(id))(o => o.flatMap(parents.get).flatten)
+        .takeWhile(_.isDefined).zipWithIndex.takeWhile(_._2 <= maxDepth)
+        .map(_._1.get).toSeq
+      walk.distinct.size < walk.size
+    }
+
   /** The reference walker: each node's names root first, self last, up to
     * the first root or missing parent; `None` when the path would exceed
     * `maxDepth` levels (deep chains and cycles alike).
@@ -92,16 +105,28 @@ object ClosureProps extends Properties("graft") {
       got == refAncestors(forest)
     }
 
-  property("transitiveClosure distinct pairs = capped ancestor set on " +
-    "random parent maps with cycles and missing parents") =
+  private def closureOf(parents: Map[Long, Option[Long]], cap: Int) =
+    Closure.transitiveClosure(parents.toSeq
+      .map { case (id, p) => (id.toString, p.map(_.toString).orNull) }
+      .toDF("id", "parent"), "id", "parent", maxDepth = cap)
+
+  property("transitiveClosure raises on a cycle within the cap") =
     forAll(parentMapGen, Gen.choose(0, 6)) { (parents, cap) =>
-      val df = parents.toSeq
-        .map { case (id, p) => (id.toString, p.map(_.toString).orNull) }
-        .toDF("id", "parent")
-      val got = Closure.transitiveClosure(df, "id", "parent", maxDepth = cap)
-        .as[(String, String)].collect()
-        .map { case (d, a) => (d.toLong, a.toLong) }.toSet
-      got == refAncestors(parents, cap)
+      refRevisits(parents, cap) ==> {
+        scala.util.Try(closureOf(parents, cap).collect()).failed.toOption
+          .exists(e => e.isInstanceOf[IllegalArgumentException] &&
+            e.getMessage.startsWith("Closure.transitiveClosure"))
+      }
+    }
+
+  property("transitiveClosure = capped ancestor set when acyclic") =
+    forAll(parentMapGen, Gen.choose(0, 6)) { (parents, cap) =>
+      !refRevisits(parents, cap) ==> {
+        val got = closureOf(parents, cap)
+          .as[(String, String)].collect()
+          .map { case (d, a) => (d.toLong, a.toLong) }
+        got.length == got.toSet.size && got.toSet == refAncestors(parents, cap)
+      }
     }
 
   property("breadcrumb path: root-first, self-last, levels = element_at") =

@@ -44,6 +44,21 @@ class ReportSpec extends SparkSpec {
     assert(b.getAs[Long]("cumulative_seconds") == 0)
   }
 
+  test("both reports fail loudly on a 2-cycle task table") {
+    // 31 <-> 32: a closure over the cycle would repeat each of its pairs
+    // once per winding and inflate tracked_seconds on both members
+    val cyclic = tasks.union(Seq(("31", "32", "Loop A", 600L),
+      ("32", "31", "Loop B", 600L)).toDF("task_id", "parent_id", "name", "budgeted"))
+    val logged = entries.union(Seq(("31", 60L)).toDF("task_id", "duration"))
+    Seq[(String, () => Unit)](
+      "BudgetReport" -> (() => BudgetReport(cyclic, logged).collect()),
+      "ProjectBudgetReport" -> (() => ProjectBudgetReport(cyclic, logged).collect())
+    ).foreach { case (report, run) =>
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains("task_id 31, 32 "), s"$report: ${e.getMessage}")
+    }
+  }
+
   test("ProjectBudgetReport flags OVER when tracked exceeds budget") {
     val over = ProjectBudgetReport(
       Seq(("1", null, "P", 100L)).toDF("task_id", "parent_id", "name", "budgeted"),
