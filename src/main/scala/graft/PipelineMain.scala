@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.concurrent.Await
@@ -36,19 +36,17 @@ import graft.sources.{BigQuerySink, FileSink, Sink, TimeCampClient, TimeCampConf
   * breadcrumbs + level columns + users/perms drop; users get settings
   * enrichment + primary-group breadcrumbs; activities fan out per
   * (user, ≤20-date chunk) with skip-and-continue; application_names get
-  * the name-fallback chain + category decode. The independent datasets
-  * are written concurrently, each chain once: the row counts `run`
-  * returns are observed on the writes, not counted afterwards.
+  * the name-fallback chain + category decode. Each dataset is written on
+  * its own thread, its transform chain once: the row counts `run`
+  * returns are observed on the writes, not counted afterwards. The
+  * activity fan-out's user ids and the application ids are read off the
+  * rows the driver parsed from the API, so `run` collects nothing and
+  * caches nothing.
   */
 object PipelineMain {
 
   val AvailableDatasets: Seq[String] =
     Seq("entries", "tasks", "computer_activities", "users", "application_names")
-
-  /** The activity datasets, in chain order: application names are looked
-    * up from the activities, so they run one after the other.
-    */
-  private val ActivityDatasets = Seq("computer_activities", "application_names")
 
   /** Name prefix of the threads `run` writes the datasets on. */
   private[graft] val PoolThreadPrefix = "graft-pipeline-"
@@ -295,16 +293,22 @@ object PipelineMain {
       Seq("task_id"), Seq(col("name")))
   }
 
-  def buildUsers(spark: SparkSession,
-      transport: TimeCampClient.Transport): DataFrame = {
+  /** The `/users` rows and their `disabled_user` settings, parsed on the
+    * driver, and the ids the activity fan-out requests.
+    *
+    * @param enabledIds the distinct non-null `user_id`s whose setting is
+    *                   not exactly "1", sorted: the users table's
+    *                   `is_enabled` rule, `!(disabled_user <=> "1")`, read
+    *                   off the parsed rows (reference `:439-445`)
+    */
+  final case class UsersFetched(users: Seq[Row],
+      settings: Seq[Row], enabledIds: Seq[String])
+
+  def fetchUsers(transport: TimeCampClient.Transport): UsersFetched = {
     val get = TimeCampClient.get(transport) _
     val users = jsonArray(get("/users", Map.empty).body)
       .map(n => Row(textOf(n, "user_id"), textOf(n, "email"),
         textOf(n, "display_name")))
-    val userSchema = StructType(Seq(
-      StructField("user_id", StringType), StructField("email", StringType),
-      StructField("display_name", StringType)))
-    val usersDf = spark.createDataFrame(users.asJava, userSchema)
     // bulk settings lookup — the reference's GET user/{id,...}/setting
     // (common/api.py:193-198), 50 ids per request; '1' → disabled;
     // missing → enabled
@@ -315,9 +319,20 @@ object PipelineMain {
           Map("name[]" -> "disabled_user")).body,
         chunk, "disabled_user")
     }.collect { case (uid, v) if v != null => Row(uid, v) }
-    val settingsDf = spark.createDataFrame(settings.asJava, StructType(Seq(
-      StructField("user_id", StringType),
-      StructField("disabled_user", StringType))))
+    val disabled = settings.collect { case Row(uid: String, "1") => uid }.toSet
+    UsersFetched(users, settings,
+      userIds.filterNot(disabled).distinct.sorted)
+  }
+
+  def buildUsers(spark: SparkSession, transport: TimeCampClient.Transport,
+      fetched: UsersFetched): DataFrame = {
+    val get = TimeCampClient.get(transport) _
+    val usersDf = spark.createDataFrame(fetched.users.asJava, StructType(Seq(
+      StructField("user_id", StringType), StructField("email", StringType),
+      StructField("display_name", StringType))))
+    val settingsDf = spark.createDataFrame(fetched.settings.asJava,
+      StructType(Seq(StructField("user_id", StringType),
+        StructField("disabled_user", StringType))))
     val enabled = usersDf.join(broadcast(settingsDf), Seq("user_id"), "left")
       .withColumn("is_enabled", !(col("disabled_user") <=> "1"))
       .drop("disabled_user")
@@ -347,13 +362,21 @@ object PipelineMain {
       Seq("user_id"), Seq(col("email")))
   }
 
-  def buildActivities(spark: SparkSession, transport: TimeCampClient.Transport,
-      from: String, to: String, userIds: Seq[String]): DataFrame = {
+  private val ActivitySchema: StructType = StructType(Seq(
+    StructField("user_id", StringType), StructField("date", StringType),
+    StructField("application_id", StringType),
+    StructField("duration", LongType)))
+
+  /** `/computer_activities` per (user, ≤20-date chunk), failed batches
+    * skipped, parsed into [[ActivitySchema]] rows on the driver.
+    */
+  def fetchActivities(transport: TimeCampClient.Transport,
+      from: String, to: String, userIds: Seq[String]): Seq[Row] = {
     val get = TimeCampClient.get(transport) _
     val dates = Iterator.iterate(java.time.LocalDate.parse(from))(_.plusDays(1))
       .takeWhile(!_.isAfter(java.time.LocalDate.parse(to))).map(_.toString).toSeq
     val batches = TimeCampClient.activityBatches(userIds, dates)
-    val rows = TimeCampClient.fetchSkippingFailures(batches) { case (u, chunk) =>
+    TimeCampClient.fetchSkippingFailures(batches) { case (u, chunk) =>
       jsonArray(get("/computer_activities",
         Map("user_id" -> u) ++ chunk.zipWithIndex.map { case (d, i) =>
           s"dates[$i]" -> d
@@ -361,20 +384,21 @@ object PipelineMain {
         .map(n => Row(textOf(n, "user_id"), textOf(n, "date"),
           textOf(n, "application_id"), longOf(n, "duration")))
     }.flatten
-    spark.createDataFrame(rows.asJava, StructType(Seq(
-      StructField("user_id", StringType), StructField("date", StringType),
-      StructField("application_id", StringType),
-      StructField("duration", LongType))))
+  }
+
+  /** The application ids the names lookup requests: the distinct ids of
+    * the fetched activity rows that are neither null nor "0", sorted
+    * (reference `:447-454`).
+    */
+  private def applicationIds(activities: Seq[Row]): Seq[String] = {
+    val i = ActivitySchema.fieldIndex("application_id")
+    activities.map(_.getString(i)).filter(id => id != null && id != "0")
+      .distinct.sorted
   }
 
   def buildApplicationNames(spark: SparkSession,
-      transport: TimeCampClient.Transport, activities: DataFrame): DataFrame = {
+      transport: TimeCampClient.Transport, ids: Seq[String]): DataFrame = {
     val get = TimeCampClient.get(transport) _
-    // semi-join-driven dimension fetch: only ids observed in activities
-    val ids = activities.select("application_id")
-      .where(col("application_id").isNotNull && col("application_id") =!= "0")
-      .distinct().orderBy("application_id")
-      .collect().map(_.getString(0)).toSeq
     val rows = TimeCampClient.batched(ids, 100).flatMap { chunk =>
       jsonArray(get("/application",
         Map("application_ids" -> chunk.mkString(","))).body)
@@ -447,33 +471,20 @@ object PipelineMain {
     val from = TimeCampClient.parseDateFlexible(c.from).toString
     val to = TimeCampClient.parseDateFlexible(c.to).toString
 
-    // activities are shared between computer_activities and
-    // application_names (the reference preloads them once, `:447-454`),
-    // and their user fan-out is the ENABLED user list derived from the
+    // The activity fan-out is the ENABLED user list derived from the
     // users endpoint (`:440-445`) — a hardcoded id list would silently
-    // drop every other user's activities on a real transport.
-    // One users build per run: a second buildUsers would re-fetch /users,
-    // the batched /user/{ids}/setting calls and /people_picker from the
-    // rate-limited API. When both the 'users' write and the enabled-id
-    // collect read the frame, it is cached: the collect evaluates the
-    // enrichment chain once and the write reads its blocks.
+    // drop every other user's activities on a real transport — and the
+    // application names are looked up from the fetched activities (the
+    // reference preloads them once, `:447-454`). Both id lists are read
+    // off the rows the driver has already parsed, so no Spark job stands
+    // between a fetch and the next, and no frame is cached for reuse.
+    // Each fetch is memoized with its failure: two chains wait on it, and
+    // a failed lazy val would be re-run by the second, fetching the
+    // rate-limited API again.
     val datasets = c.datasets.distinct
-    val usesActivities = datasets.exists(ActivityDatasets.contains)
-    val cached = new ConcurrentLinkedQueue[DataFrame]()
-    def cachedForReuse(df: DataFrame): DataFrame = { cached.add(df); df.cache() }
-    // memoized with its failure: two chains wait on it, and a failed lazy
-    // val would be re-run by the second, fetching the API again
-    lazy val usersBuilt = Try {
-      val users = buildUsers(spark, transport)
-      if (usesActivities && datasets.contains("users")) cachedForReuse(users)
-      else users
-    }
-    def usersFrame = usersBuilt.get
-    lazy val activeUserIds = usersFrame
-      .where(col("is_enabled")).select("user_id")
-      .collect().map(_.getString(0)).toSeq.sorted
-    lazy val activities = cachedForReuse(buildActivities(spark, transport,
-      from, to, userIds = activeUserIds))
+    lazy val usersFetched = Try(fetchUsers(transport))
+    lazy val activities = Try(fetchActivities(transport, from, to,
+      usersFetched.get.enabledIds))
 
     // one write per dataset; its row count is observed on that write, so
     // the transform chain runs once and no count action follows it
@@ -481,13 +492,11 @@ object PipelineMain {
       val df = ds match {
         case "entries" => buildEntries(spark, transport, from, to)
         case "tasks" => buildTasks(spark, transport)
-        case "users" =>
-          // the enabled-id collect fills the cache before the write reads it
-          if (usesActivities) activeUserIds
-          usersFrame
-        case "computer_activities" => activities
+        case "users" => buildUsers(spark, transport, usersFetched.get)
+        case "computer_activities" =>
+          spark.createDataFrame(activities.get.asJava, ActivitySchema)
         case "application_names" =>
-          buildApplicationNames(spark, transport, activities)
+          buildApplicationNames(spark, transport, applicationIds(activities.get))
       }
       val rows = Observation()
       sink.write(df.observe(rows, count(lit(1)).as("rows")), c.output, ds,
@@ -501,39 +510,32 @@ object PipelineMain {
             "the frame it is given)")
       }
     }
-    // a chain stops at its first failure
-    def runChain(chain: List[String]): List[(String, Try[Long])] = chain match {
-      case ds :: rest =>
-        val r = try Success(write(ds)) catch { case e: Throwable => Failure(e) }
-        (ds -> r) :: (if (r.isSuccess) runChain(rest) else Nil)
-      case Nil => Nil
-    }
 
-    // The independent chains run concurrently: entries, tasks, users, and
-    // computer_activities → application_names (the names are looked up
-    // from the cached activities). The activities wait for the enabled ids
-    // through the lazy vals above, so the users write overlaps them.
-    val chains = datasets.filterNot(ActivityDatasets.contains).map(List(_)) ++
-      Some(ActivityDatasets.filter(datasets.contains).toList).filter(_.nonEmpty)
+    // Every dataset is written on its own thread, its jobs labelled
+    // `pipeline/<dataset>` (the description is thread-local). The two
+    // activity datasets wait on the memoized rows through the lazy vals
+    // above, so the names fetch overlaps the activities write.
     val threadIds = new AtomicInteger()
-    val pool = Executors.newFixedThreadPool(chains.size, (r: Runnable) => {
+    val pool = Executors.newFixedThreadPool(datasets.size, (r: Runnable) => {
       val t = new Thread(r, PoolThreadPrefix + threadIds.incrementAndGet())
       t.setDaemon(true)
       t
     })
     try {
-      val pending = chains.map(chain => pool.submit[List[(String, Try[Long])]](
-        () => runChain(chain)))
+      val pending = datasets.map(ds => ds -> pool.submit[Try[Long]] { () =>
+        val sc = spark.sparkContext
+        sc.setJobDescription(s"pipeline/$ds")
+        try Success(write(ds)) catch { case e: Throwable => Failure(e) }
+        finally sc.setJobDescription(null)
+      })
       // every chain finishes before the first failure, in dataset order,
       // is rethrown as it was thrown
-      val results = pending.flatMap(_.get()).toMap
-      datasets.flatMap(results.get).collectFirst { case Failure(e) => e }
-        .foreach(e => throw e)
-      datasets.map(ds => ds -> results(ds).get).toMap
+      val results = pending.map { case (ds, r) => ds -> r.get() }
+      results.collectFirst { case (_, Failure(e)) => e }.foreach(e => throw e)
+      results.map { case (ds, r) => ds -> r.get }.toMap
     } finally {
       pool.shutdownNow()
       pool.awaitTermination(1, TimeUnit.MINUTES)
-      cached.forEach(_.unpersist())
     }
   }
 

@@ -14,6 +14,11 @@ import graft.sources.{BigQuerySink, TimeCampClient}
 class PipelineMainSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Spark jobs of a stub `run` of all five datasets: the writes and the
+    * hierarchy walks' jobs, with no collect beside them.
+    */
+  private val LabelledJobs = 28
+
   private def cfg(out: String, datasets: Seq[String], format: String = "jsonl") =
     PipelineMain.Config(from = "2024-01-01", to = "2024-01-03",
       output = out, format = format, datasets = datasets)
@@ -116,6 +121,9 @@ class PipelineMainSpec extends SparkSpec {
       cfg(out, PipelineMain.AvailableDatasets)))
     val funcs = actions.map(_._1)
     assert(!funcs.contains("count"), funcs)
+    // the fan-out ids are read off the parsed rows: besides the writes,
+    // only the hierarchy walks' checkpoints run, and nothing is collected
+    assert(funcs.toSet.subsetOf(Set("command", "localCheckpoint")), funcs)
     assert(!funcs.exists(_.startsWith("failed:")), funcs)
     val writes = actions.filter(_._1 == "command")
     assert(writes.size === PipelineMain.AvailableDatasets.size, funcs)
@@ -127,6 +135,101 @@ class PipelineMainSpec extends SparkSpec {
     val apps = graft.sources.FileSink.read(spark, out, "application_names", "jsonl")
     assert(counts === Map("entries" -> 5L, "tasks" -> 3L, "users" -> 2L,
       "computer_activities" -> 3L, "application_names" -> apps.count()))
+  }
+
+  test("every job run starts is labelled pipeline/<dataset>") {
+    val out = Files.createTempDirectory("pipe").toString
+    val labels = jobDescriptionsDuring(PipelineMain.run(spark,
+      cfg(out, PipelineMain.AvailableDatasets)))
+    assert(labels.forall(l => l != null && l.startsWith("pipeline/")), labels)
+    assert(labels.map(_.stripPrefix("pipeline/")).toSet ===
+      PipelineMain.AvailableDatasets.toSet, labels)
+    // the labels are properties of the jobs, not jobs of their own
+    assert(labels.size === LabelledJobs, labels)
+  }
+
+  test("a /users row without user_id stays in the users table and is " +
+    "skipped by the activity fan-out") {
+    val requested = new ConcurrentLinkedQueue[String]()
+    PipelineMain.registerTransport("stub-null-user", (url, params) => url match {
+      case "/users" => TimeCampClient.Response(200,
+        """[{"user_id": "1", "email": "a@example.com", "display_name": "Ann"},
+          |{"user_id": null, "email": "x@example.com", "display_name": "Xan"}]"""
+          .stripMargin)
+      case "/computer_activities" =>
+        requested.add(params("user_id"))
+        PipelineMain.stubTransport(url, params)
+      case _ => PipelineMain.stubTransport(url, params)
+    })
+    val out = Files.createTempDirectory("pipe").toString
+    val counts = PipelineMain.run(spark, cfg(out,
+      Seq("users", "computer_activities")).copy(transportKey = "stub-null-user"))
+    assert(counts === Map("users" -> 2L, "computer_activities" -> 3L))
+    assert(requested.asScala.toSeq === Seq("1"))
+    val users = graft.sources.FileSink.read(spark, out, "users", "jsonl")
+    assert(users.where(col("user_id").isNull).select("email").as[String]
+      .collect().toSeq === Seq("x@example.com"))
+  }
+
+  test("the fan-outs follow the reference's rules: activities for the " +
+    "users table's enabled ids, names for the distinct real application " +
+    "ids, at most 100 per request") {
+    val activityUsers = new ConcurrentLinkedQueue[String]()
+    val appRequests = new ConcurrentLinkedQueue[Seq[String]]()
+    // user 1 is disabled ("1"), 2 carries "0", 3 has no setting, 4 is
+    // listed twice
+    val usersBody = Seq("1", "2", "3", "4", "4").map(id =>
+      s"""{"user_id": "$id", "email": "u$id@example.com"}""")
+      .mkString("[", ",", "]")
+    def settingsBody(ids: Set[String]) =
+      Seq("1" -> "1", "2" -> "0").collect { case (id, v) if ids(id) =>
+        s"""{"userId": $id, "name": "disabled_user", "value": "$v"}"""
+      }.mkString("[", ",", "]")
+    // per user: application "0", a null id, a shared id twice, and 60 ids
+    // of its own, so the names lookup spans two batches
+    def activityBody(user: String, date: String) = {
+      val apps = Seq("0", null, "7", "7") ++ (0 until 60).map(i => s"$user-$i")
+      def json(v: String) = if (v == null) "null" else "\"" + v + "\""
+      apps.map(a => s"""{"user_id": "$user", "date": "$date",
+        | "application_id": ${json(a)}, "duration": 60}""".stripMargin)
+    }
+    PipelineMain.registerTransport("stub-fan-out", (url, params) => url match {
+      case "/users" => TimeCampClient.Response(200, usersBody)
+      case u if u.startsWith("/user/") && u.endsWith("/setting") =>
+        TimeCampClient.Response(200, settingsBody(
+          u.stripPrefix("/user/").stripSuffix("/setting").split(",").toSet))
+      case "/computer_activities" =>
+        val user = params("user_id")
+        activityUsers.add(user)
+        val dates = params.collect { case (k, v) if k.startsWith("dates[") => v }
+        TimeCampClient.Response(200,
+          dates.toSeq.flatMap(activityBody(user, _)).mkString("[", ",", "]"))
+      case "/application" =>
+        appRequests.add(params("application_ids").split(",").toSeq)
+        PipelineMain.stubTransport(url, params)
+      case _ => PipelineMain.stubTransport(url, params)
+    })
+    val out = Files.createTempDirectory("pipe").toString
+    val counts = PipelineMain.run(spark, cfg(out, Seq("users",
+      "computer_activities", "application_names"))
+      .copy(transportKey = "stub-fan-out"))
+    val users = graft.sources.FileSink.read(spark, out, "users", "jsonl")
+    val enabled = users.where(col("is_enabled")).select("user_id")
+      .as[String].collect().toSeq
+    assert(enabled.sorted === Seq("2", "3", "4"))
+    // one request per enabled user and date chunk (3 dates: one chunk)
+    assert(activityUsers.asScala.toSeq.sorted === enabled.sorted)
+    val activities = graft.sources.FileSink.read(spark, out,
+      "computer_activities", "jsonl")
+    val appIds = activities.where(col("application_id").isNotNull &&
+      col("application_id") =!= "0").select("application_id").distinct()
+      .as[String].collect().toSeq
+    assert(appIds.size === 1 + 3 * 60)
+    val requested = appRequests.asScala.toSeq
+    assert(requested.forall(_.size <= 100), requested.map(_.size))
+    assert(requested.flatten.sorted === appIds.sorted)
+    assert(counts === Map("users" -> 4L,
+      "computer_activities" -> 3L * 3 * 64, "application_names" -> 181L))
   }
 
   test("a dataset with no rows counts 0 from its observed write") {

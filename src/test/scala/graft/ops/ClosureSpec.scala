@@ -109,7 +109,7 @@ class ClosureSpec extends SparkSpec {
     assert(anc10 == 10) // self + 9 ancestors
   }
 
-  test("recursive-CTE closure matches the iterative fixpoint on a forest") {
+  test("the doubling-walk closure matches the parent-pointer fixpoint on a forest") {
     // the in-memory reference walks parent pointers to their fixpoint
     val c = closureSet(forestRows, maxDepth = 32)
     assert(c.length == c.toSet.size) // a forest derives each pair once
