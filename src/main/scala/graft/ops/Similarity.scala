@@ -7,14 +7,13 @@ import org.apache.spark.sql.functions._
 /** Approximate-nearest-neighbor / similarity search over an embedding
   * column (ArrayType(Float)).
   *
-  * Scale notes: brute force is a broadcast nested loop of the (small) query
-  * set against the corpus — one corpus scan, no shuffle of the big side,
-  * then the partial-aggregable top-k tail ([[scoreRank]] — k rows per
-  * (partition, query) reach the one exchange, never the full scored
-  * set). The bucketed variant (`lshTopK`) first
-  * assigns each vector to a sign-random-projection bucket so candidate
-  * generation joins on the bucket key — the classic IVF/LSH trade: recall
-  * for a shuffle that's O(corpus) instead of O(corpus × queries).
+  * Scale notes: every top-k operator is one scan skeleton ([[topK]]): the
+  * (small) query set is broadcast against the streaming corpus — one
+  * corpus scan, no shuffle of the big side — then the partial-aggregable
+  * top-k tail (k rows per (partition, query) reach the one exchange,
+  * never the full scored set). The families differ only in the key the
+  * candidates share (none for brute force, an LSH bucket, an IVF cell)
+  * and in the code they score (float vector, PQ codes, sign bits).
   */
 object Similarity {
 
@@ -59,28 +58,118 @@ object Similarity {
     when(np === lit(0.0), lit(Double.NaN)).otherwise(d / np)
   }
 
-  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
-    * vectors (excluding self), ties broken by corpus id.
+  /** The ONE scan skeleton behind every top-k operator: candidate join,
+    * self-exclusion, score, rank. `queries` carries `query_id`, `corpus`
+    * carries `neighbor_id`, and both carry whatever `score` reads plus the
+    * `key` column when there is one.
     *
     * The QUERY side is broadcast (a query set is small by construction);
     * the corpus streams through one scan with zero shuffle of the big side
     * — broadcasting the corpus instead would OOM every executor at scale.
-    * The only shuffle is the |queries|-keyed top-k aggregation exchange
-    * ([[scoreRank]]), which carries k rows per (partition, query).
+    * With a `key` (an IVF cell, an LSH bucket, a shortlist's neighbor id)
+    * the candidates are the broadcast hash join on it; without one they
+    * are every corpus row, a broadcast nested loop. A query never ranks
+    * itself. The only shuffle is the |queries|-keyed top-k aggregation
+    * exchange of [[rankBy]], which carries k rows per (partition, query).
+    */
+  private def topK(
+      queries: DataFrame, corpus: DataFrame, key: Option[String],
+      score: Column, k: Int, rankKey: Column => Column): DataFrame =
+    rankBy(
+      corpus.join(broadcast(queries), key.toSeq)
+        .where(col("query_id") =!= col("neighbor_id"))
+        .withColumn("_score", score),
+      k, rankKey)
+
+  /** The ONE rank tail over a `_score` column: per query, the k largest
+    * `rankKey(_score)`, ties to the smaller neighbor_id, as `(query_id,
+    * neighbor_id, rank, _key)`. Cosines rank by [[cosineKey]], distances
+    * by [[distanceKey]]. The partial-aggregable
+    * [[graft.functions.TopKAggregator]] keeps (value DESC, id ASC) — the
+    * `row_number` contract — but each map task reduces its scored pairs
+    * to a k-element buffer BEFORE the shuffle, where a window would sort
+    * the WHOLE per-query candidate set through one exchange (at 100 TB
+    * the window exchange is the plan).
+    *
+    * NULL scores DROP (a NULL vector, a malformed query, a NaN distance):
+    * the typed aggregator would otherwise decode NULL as 0.0 and silently
+    * rank garbage mid-pack. The filter reads the raw score and the key is
+    * taken inside the aggregate: Spark pushes the filter into the join
+    * condition, and a filter on the key would cast each decimal ADC sum
+    * to double there a second time (measured on q_pq_topk, SCALE.md).
+    */
+  private def rankBy(
+      scored: DataFrame, k: Int, rankKey: Column => Column): DataFrame = {
+    val topk = graft.functions.TopKAggregator.topK(k)
+    scored
+      .where(col("_score").isNotNull)
+      .groupBy("query_id")
+      .agg(topk(rankKey(col("_score")), col("neighbor_id")).as("_top"))
+      .select(col("query_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
+      .select(col("query_id"), col("_t._2").as("neighbor_id"),
+        (col("_i") + 1).cast("int").as("rank"), col("_t._1").as("_key"))
+  }
+
+  /** Cosine rank key. NaN ranks GREATEST (the documented zero-norm-cosine
+    * semantics; Spark's DESC sort puts NaN first), but Scala's total
+    * ordering on Double would sort −NaN last — so NaN enters the
+    * aggregator as the sentinel 2.0 and [[cosineOut]] decodes it back.
+    * Lossless because cosine is confined to [−1, 1] ∪ {NaN}, so 2.0 is
+    * unreachable as a genuine score.
+    */
+  private def cosineKey(score: Column): Column =
+    nanvl(score.cast("double"), lit(2.0))
+
+  private def cosineOut(ranked: DataFrame): DataFrame =
+    ranked.select(col("query_id"), col("neighbor_id"), col("rank"),
+      when(col("_key") === 2.0, lit(Double.NaN)).otherwise(col("_key"))
+        .as("score"))
+
+  /** Distance rank key: the smallest distance ranks first. */
+  private def distanceKey(distance: Column): Column =
+    negate(distance.cast("double"))
+
+  /** Un-negates a distance rank key into the output column `name`. */
+  private def distanceOut(
+      ranked: DataFrame, name: String, tpe: String = "double"): DataFrame =
+    ranked.select(col("query_id"), col("neighbor_id"), col("rank"),
+      negate(col("_key")).cast(tpe).as(name))
+
+  /** The cosine scan: `(query_id, _qv, _qn)` against `(neighbor_id, _cv,
+    * _cn)`, norms carried so each pair costs one dot product.
+    */
+  private def cosineScan(
+      q: DataFrame, c: DataFrame, key: Option[String], k: Int): DataFrame =
+    cosineOut(topK(q, c, key,
+      cosineFromNorms(dot(col("_qv"), col("_cv")), col("_qn"), col("_cn")),
+      k, cosineKey))
+
+  /** [[rankBy]] over a frame already scored in a `score` column (score
+    * DESC, NaN greatest, NULL dropped, ties to the smaller neighbor_id).
+    */
+  private[graft] def scoreRank(scored: DataFrame, k: Int): DataFrame =
+    cosineOut(rankBy(scored.withColumnRenamed("score", "_score"), k, cosineKey))
+
+  /** [[rankBy]] over a frame already scored in an `_adc` distance column
+    * (adc ASC, NULL dropped, ties to the smaller neighbor_id).
+    */
+  private[graft] def adcRank(scored: DataFrame, k: Int): DataFrame =
+    distanceOut(
+      rankBy(scored.withColumnRenamed("_adc", "_score"), k, distanceKey), "adc")
+
+  /** Brute-force cosine top-k: for each query vector, the k nearest corpus
+    * vectors (excluding self), ties broken by corpus id — [[topK]] with no
+    * candidate key.
     */
   def bruteForceTopK(
       queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      norm(col(vecCol)).as("_qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      norm(col(vecCol)).as("_cn"))
-    scoreRank(
-      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          cosineFromNorms(dot(col("_qv"), col("_cv")), col("_qn"), col("_cn"))),
-      k)
-  }
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    cosineScan(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
+        norm(col(vecCol)).as("_qn")),
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
+        norm(col(vecCol)).as("_cn")),
+      None, k)
 
   /** Sign-random-projection bucket id: bit per hyperplane, hyperplane h =
     * deterministic ±1 pattern derived from md5(h || ':' || index) — fully
@@ -463,55 +552,43 @@ object Similarity {
     * a production build would train k-means centroids offline). Every
     * vector is assigned to its max-cosine centroid (ties → smaller
     * centroid id); search compares the query only against its own cell.
-    * The centroid set is broadcast, so assignment is a map-side pass over
-    * the corpus — the shuffle is one hash partition by cell id.
+    *
+    * Centroids live on the driver (an IVF coarse quantizer is a model
+    * artifact, not data) and are inlined as literals — cell assignment is
+    * a pure map-side projection, no join, no shuffle of the corpus. Seed
+    * extraction and the argmax expression are shared with kmeansFit
+    * (seedCentroids/withCell): one definition for the tie-break/rounding
+    * contract the oracle twins mirror. Multi-probe (nprobe > 1) fans out
+    * QUERY rows to their nprobe nearest cells — the corpus side stays
+    * one row per vector in its own cell, so the recall lever costs
+    * query-batch-sized work, never a corpus pass.
     */
   def ivfTopK(
       queries: DataFrame, corpus: DataFrame,
       idCol: String, vecCol: String, k: Int, nCentroids: Int = 4,
       nprobe: Int = 1): DataFrame = {
-    // Centroids live on the driver (an IVF coarse quantizer is a model
-    // artifact, not data) and are inlined as literals — cell assignment is
-    // then a pure map-side projection, no join, no shuffle of the corpus.
-    // Seed extraction and the argmax expression are shared with kmeansFit
-    // (seedCentroids/cellOf): one definition for the tie-break/rounding
-    // contract the oracle twins mirror. Multi-probe (nprobe > 1) fans out
-    // QUERY rows to their nprobe nearest cells — the corpus side stays
-    // one row per vector in its own cell, so the recall lever costs
-    // query-batch-sized work, never a corpus pass.
     val cents = seedCentroids(corpus, idCol, vecCol, nCentroids)
-    val q = withCells(queries, idCol, vecCol, cents, nprobe)
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        col("_cell"), norm(col(vecCol)).as("_qn"))
-    val c = withCell(corpus, idCol, vecCol, cents)
-      .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-        col("_cell"), norm(col(vecCol)).as("_cn"))
-    scoreRank(
-      q.join(c, Seq("_cell"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          cosineFromNorms(dot(col("_qv"), col("_cv")), col("_qn"), col("_cn"))),
-      k)
+    ivfRank(
+      withCell(corpus, idCol, vecCol, cents)
+        .select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
+          col("_cell"), norm(col(vecCol)).as("_cn")),
+      queries, idCol, vecCol, cents, nprobe, k)
   }
 
-  /** The IVF artifact/probe split — the production shape of [[ivfTopK]].
-    * [[ivfTopK]] rebuilds the corpus cell assignment inline on every
-    * query; a deployment builds it ONCE per model refresh and amortizes
-    * it over every query batch until the next refresh. `ivfBuild`
-    * persists the assigned corpus `(id, vec, _cell, _vn)` through
-    * [[graft.sources.BucketedSink]] bucketed on `_cell` — the ONE
-    * hash-partitioning every probe joins on — and precomputes the vector
-    * norms so the probe pays neither the assignment nor the norm pass.
-    * Because the bucket spec rides the catalog, every later probe joins
-    * the corpus with ZERO corpus-side Exchange (PlanSpec pins it): the
-    * only shuffles left are the query side (batch-sized) and the
-    * |queries|-keyed top-k aggregation. At 100 TB that turns the dominant
-    * corpus shuffle into a once-per-refresh write cost.
-    *
-    * Returns the centroid model (the same driver-side artifact
-    * [[ivfTopK]] derives inline) — callers hand it to [[ivfProbe]], the
-    * same split as a k-means model: artifact on disk, model in hand.
+  /** The cell-restricted cosine scan shared by the inline ([[ivfTopK]])
+    * and artifact ([[ivfProbe]]) paths, which differ ONLY in where the
+    * corpus frame `(neighbor_id, _cv, _cell, _cn)` comes from.
     */
+  private def ivfRank(
+      corpusSide: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, cents: Seq[(Long, Seq[Double])], nprobe: Int,
+      k: Int): DataFrame =
+    cosineScan(
+      withCells(queries, idCol, vecCol, cents, nprobe)
+        .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
+          col("_cell"), norm(col(vecCol)).as("_qn")),
+      corpusSide, Some("_cell"), k)
+
   /** Deterministic fingerprint of a centroid model — stamped into the
     * [[ivfBuild]] artifact and re-derived by [[ivfProbe]] from the model
     * it was handed, so probing a disk artifact with a DIFFERENT model
@@ -534,6 +611,31 @@ object Similarity {
       md.digest().map("%02x".format(_)).mkString.take(12)
   }
 
+  /** The bucketed `_cell` layout every IVF artifact is written and read
+    * back with (a read needs only the catalog prefix, not the bucket
+    * count).
+    */
+  private def cellSink(numBuckets: Int, prefix: String) =
+    graft.sources.BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), prefix)
+
+  /** The IVF artifact/probe split — the production shape of [[ivfTopK]].
+    * [[ivfTopK]] rebuilds the corpus cell assignment inline on every
+    * query; a deployment builds it ONCE per model refresh and amortizes
+    * it over every query batch until the next refresh. `ivfBuild`
+    * persists the assigned corpus `(id, vec, _cell, _vn)` through
+    * [[graft.sources.BucketedSink]] bucketed on `_cell`, and precomputes
+    * the vector norms, so the probe pays neither the assignment nor the
+    * norm pass. The probe broadcasts its queries like every top-k here,
+    * so the corpus reaches the join with zero Exchange whatever its file
+    * layout (PlanSpec pins it). What the bucket spec keeps is each cell's
+    * rows in one bucket: a scan filtered to a few cells prunes whole
+    * buckets, and a join against another `_cell`-bucketed table skips its
+    * shuffle.
+    *
+    * Returns the centroid model (the same driver-side artifact
+    * [[ivfTopK]] derives inline) — callers hand it to [[ivfProbe]], the
+    * same split as a k-means model: artifact on disk, model in hand.
+    */
   def ivfBuild(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, numBuckets: Int, target: String, table: String,
@@ -545,21 +647,17 @@ object Similarity {
       // cells, as a constant column (free under parquet dictionary
       // encoding) — see centsFingerprint
       .withColumn("_params", lit(centsFingerprint(cents)))
-    graft.sources
-      .BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), tablePrefix)
-      .write(assigned, target, table, "parquet")
+    cellSink(numBuckets, tablePrefix).write(assigned, target, table, "parquet")
     cents
   }
 
   /** Catalog-resolved read of an [[ivfBuild]] artifact — keeps the bucket
-    * spec visible to the planner (a bare-path read would silently drop it
-    * and reintroduce the corpus shuffle the artifact exists to remove).
+    * spec visible to the planner (a bare-path read would silently drop it).
     */
   def ivfAssigned(
       spark: org.apache.spark.sql.SparkSession, target: String,
       table: String, tablePrefix: String = "ivf"): DataFrame =
-    graft.sources.BucketedSink(1, Seq("_cell"), Nil, tablePrefix)
-      .read(spark, target, table)
+    cellSink(1, tablePrefix).read(spark, target, table)
 
   /** Probe a persisted [[ivfBuild]] assignment: queries are assigned
     * map-side against the centroid model (no corpus touch), then joined
@@ -567,11 +665,10 @@ object Similarity {
     * bit-identical to [[ivfTopK]] on the same corpus — same assignment
     * expression (`vec_top_cells(..., 1)(0) ≡ vec_argmax_cell`, spec-
     * pinned), same scoring arithmetic (`_vn` was computed by the same
-    * `norm` at build time), same rank contract — so the two paths share
+    * `norm` at build time), same rank tail — so the two paths share
     * one oracle. `nprobe > 1` probes the query's nprobe nearest cells
     * (the standard IVF recall lever; size it with [[probesFor]]): the
-    * fan-out multiplies QUERY rows only, the bucketed corpus still
-    * reaches the join with zero Exchange (PlanSpec pins it at nprobe 2).
+    * fan-out multiplies QUERY rows only.
     */
   def ivfProbe(
       queries: DataFrame, assigned: DataFrame, idCol: String,
@@ -582,17 +679,10 @@ object Similarity {
     // from one quantizer to corpus cells from another (silent recall
     // collapse). Pre-column artifacts are tolerated.
     Dedup.requireStoreParams(assigned, centsFingerprint(cents), "IVF")
-    val q = withCells(queries, idCol, vecCol, cents, nprobe)
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        col("_cell"), norm(col(vecCol)).as("_qn"))
-    val c = assigned.select(col(idCol).as("neighbor_id"),
-      col(vecCol).as("_cv"), col("_cell"), col("_vn").as("_cn"))
-    scoreRank(
-      q.join(c, Seq("_cell"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          cosineFromNorms(dot(col("_qv"), col("_cv")), col("_qn"), col("_cn"))),
-      k)
+    ivfRank(
+      assigned.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
+        col("_cell"), col("_vn").as("_cn")),
+      queries, idCol, vecCol, cents, nprobe, k)
   }
 
   /** Deterministic centroid seeds: the first `k` corpus vectors by id,
@@ -672,16 +762,23 @@ object Similarity {
   private[graft] def withCell(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ordered = cents.sortBy(_._1)
-    // single-Literal model artifacts (the bookMat/bpeTokens shape): at
-    // the √n law cell count the old CreateArray matrix was k×dim
-    // literal nodes (≈2,900 at sf0.1's k=45) re-walked by every
-    // analyzer pass — plan-construction overhead, not row work
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (mat, cidArr) = centModel(cents)
     corpus.select(col(idCol), col(vecCol),
       element_at(cidArr,
         call_function("vec_argmax_cell", col(vecCol), mat) + 1).as("_cell"))
+  }
+
+  /** A centroid model as plan literals: the k×dim matrix and the centroid
+    * ids, both in ascending-id order, so dense index i decodes to id
+    * `element_at(ids, i + 1)`. Single-Literal model artifacts (the
+    * bookMat/bpeTokens shape): at the √n law cell count a CreateArray
+    * matrix was k×dim literal nodes (≈2,900 at sf0.1's k=45) re-walked by
+    * every analyzer pass — plan-construction overhead, not row work.
+    */
+  private def centModel(cents: Seq[(Long, Seq[Double])]): (Column, Column) = {
+    val ordered = cents.sortBy(_._1)
+    (modelConst(typedlit(ordered.map(_._2.toSeq))),
+      modelConst(typedlit(ordered.map(_._1))))
   }
 
   /** Query `(id, vec)` → `(id, vec, _cell)` with ONE ROW PER PROBED
@@ -705,10 +802,7 @@ object Similarity {
       withCell(corpus, idCol, vecCol, cents)
         .where(col("_cell").isNotNull)
     } else {
-      val ordered = cents.sortBy(_._1)
-      // single-Literal model (see withCell)
-      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-      val cidArr = modelConst(typedlit(ordered.map(_._1)))
+      val (mat, cidArr) = centModel(cents)
       corpus.select(col(idCol), col(vecCol),
         explode(transform(
           call_function("vec_top_cells", col(vecCol), mat, lit(nprobe)),
@@ -744,7 +838,7 @@ object Similarity {
       (i, cv, math.sqrt(s))
     }.toDF("_ci", "_cv", "_cn")
       .select(col("_ci"), col("_cv").cast("array<double>"), col("_cn"))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (_, cidArr) = centModel(cents)
     // k-row broadcast side: this cross join is the centroid-model
     // attachment, the same broadcast-small-side class as the scalar
     // attachments — never corpus × corpus
@@ -892,8 +986,7 @@ object Similarity {
   def inertia(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): Double = {
-    val ordered = cents.sortBy(_._1)
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
+    val (mat, _) = centModel(cents)
     corpus
       .select((lit(1.0) - cosine(col(vecCol),
         element_at(mat,
@@ -943,8 +1036,7 @@ object Similarity {
     // would fail vec_argmax_cell's analysis — and fall through to the
     // first-k pad, which is the only meaningful answer there
     (1 to (if (first.isEmpty) 0 else rounds)).foreach { r =>
-      val ordered = cands.sortBy(_._1)
-      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
+      val (mat, _) = centModel(cands)
       val scored = clean.select(col("_id"), col("_v"),
         (lit(1.0) - cosine(col("_v"),
           element_at(mat,
@@ -1130,9 +1222,7 @@ object Similarity {
     // which blew the codegen method limits past a few dozen centroids
     // (the cellsByLiteral lesson) and priced 2k cosines per row where
     // the law k = ⌈√n⌉ needs k + 1
-    val ordered = cents.sortBy(_._1)
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (mat, cidArr) = centModel(cents)
     val idx = call_function("vec_argmax_cell", col(vecCol), mat)
     // the score is a DIAGNOSTIC, not an oracle-comparable value: it is
     // a cosine against 6dp-rounded means, and those means are not
@@ -1190,36 +1280,10 @@ object Similarity {
       .select(col(idCol), col("cell"))
   }
 
-  /** Embedding-space benchmark decontamination — the SEMANTIC arm of the
-    * decontamination ladder (exact shingles → minhash fuzzy →
-    * winnowed spans → this): drop every corpus doc whose embedding
-    * sits within cosine ≥ `threshold` of ANY benchmark embedding.
-    * Paraphrase-level eval leakage survives all text-overlap detectors
-    * (no shared n-grams), but a decent encoder maps it next to its
-    * source — which is exactly what this catches.
-    *
-    * Shape: the benchmark is eval-suite-sized by construction, so its
-    * (vector, norm) pairs ride ONE broadcast; the corpus streams a
-    * single scan through a broadcast nested-loop LEFT ANTI join — zero
-    * shuffle at any corpus size, |corpus| × |benchmark| dot products of
-    * map-side work (the native `vec_dot` kernel). For benchmarks too
-    * big for that product, bucket BOTH sides first and restrict the
-    * comparison to shared buckets — the [[cosineNearDupPairsBanded]] /
-    * [[semDeDup]] machinery; the exact arm here is the graded truth
-    * those approximations are sized against.
-    *
-    * Malformed (zero-norm / NaN) scores never count as contamination
-    * hits (the explicit isnan guard — BOTH engines would otherwise
-    * treat NaN ≥ τ as true, silently deleting every failed-embedding
-    * row as "contaminated"); such rows pass through to the quality/
-    * dedup stages whose job they are. Scores compare at 6dp like every
-    * cosine gate in this file, so the DuckDB twin reproduces the
-    * survivor set exactly.
-    */
   /** Retrieval-evaluation metrics — recall@k, MRR and binary-relevance
     * nDCG@k per query — for an approximate ranking (`results`) against
     * an exact one (`truth`), both in the (query_id, neighbor_id, rank)
-    * [[scoreRank]] shape. This is the measurement half every ANN ladder
+    * top-k shape. This is the measurement half every ANN ladder
     * owes: the RecallBench harnesses report corpus aggregates; this is
     * the OPERATOR form a pipeline runs per evaluation batch (and the
     * per-query frame those aggregates mean over).
@@ -1263,6 +1327,32 @@ object Similarity {
         round(coalesce(col("_dcg"), lit(0.0)) / idcg, 6).as("ndcg"))
   }
 
+  /** Embedding-space benchmark decontamination — the SEMANTIC arm of the
+    * decontamination ladder (exact shingles → minhash fuzzy →
+    * winnowed spans → this): drop every corpus doc whose embedding
+    * sits within cosine ≥ `threshold` of ANY benchmark embedding.
+    * Paraphrase-level eval leakage survives all text-overlap detectors
+    * (no shared n-grams), but a decent encoder maps it next to its
+    * source — which is exactly what this catches.
+    *
+    * Shape: the benchmark is eval-suite-sized by construction, so its
+    * (vector, norm) pairs ride ONE broadcast; the corpus streams a
+    * single scan through a broadcast nested-loop LEFT ANTI join — zero
+    * shuffle at any corpus size, |corpus| × |benchmark| dot products of
+    * map-side work (the native `vec_dot` kernel). For benchmarks too
+    * big for that product, bucket BOTH sides first and restrict the
+    * comparison to shared buckets — the [[cosineNearDupPairsBanded]] /
+    * [[semDeDup]] machinery; the exact arm here is the graded truth
+    * those approximations are sized against.
+    *
+    * Malformed (zero-norm / NaN) scores never count as contamination
+    * hits (the explicit isnan guard — BOTH engines would otherwise
+    * treat NaN ≥ τ as true, silently deleting every failed-embedding
+    * row as "contaminated"); such rows pass through to the quality/
+    * dedup stages whose job they are. Scores compare at 6dp like every
+    * cosine gate in this file, so the DuckDB twin reproduces the
+    * survivor set exactly.
+    */
   def semanticDecontaminate(
       corpus: DataFrame, benchmark: DataFrame,
       vecCol: String, threshold: Double): DataFrame =
@@ -1299,20 +1389,15 @@ object Similarity {
     */
   def lshTopK(
       queries: DataFrame, corpus: DataFrame,
-      idCol: String, vecCol: String, k: Int, numPlanes: Int = 4): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-      srpBucket(col(vecCol), numPlanes).as("_bkt"),
-      norm(col(vecCol)).as("_qn"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
-      srpBucket(col(vecCol), numPlanes).as("_bkt"),
-      norm(col(vecCol)).as("_cn"))
-    scoreRank(
-      q.join(c, Seq("_bkt"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("score",
-          cosineFromNorms(dot(col("_qv"), col("_cv")), col("_qn"), col("_cn"))),
-      k)
-  }
+      idCol: String, vecCol: String, k: Int, numPlanes: Int = 4): DataFrame =
+    cosineScan(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
+        srpBucket(col(vecCol), numPlanes).as("_bkt"),
+        norm(col(vecCol)).as("_qn")),
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"),
+        srpBucket(col(vecCol), numPlanes).as("_bkt"),
+        norm(col(vecCol)).as("_cn")),
+      Some("_bkt"), k)
 
   /** Symmetric int8 quantization of an embedding column: per-vector scale
     * = max |x|, q_i = floor(x_i·127/scale + 0.5) ∈ [-127, 127] — the
@@ -1430,12 +1515,11 @@ object Similarity {
     * malformed queries DROP (NULL `bin_words` — the bruteForceTopK NaN
     * discipline, not an arbitrary neighbor_id-ordered answer).
     *
-    * Scale shape: queries broadcast; the corpus streams ONE scan of 8
-    * bytes/vector touching XOR+POPCNT per word, and the rank tail is the
-    * partial-aggregable [[adcRank]] — k rows per partition reach the one
-    * exchange. This is the cheapest full-scan retrieval arithmetic in
-    * the file; its recall ceiling (1 bit/dim cannot rank what it cannot
-    * resolve) is what [[rerankL2]] on a widened shortlist buys back.
+    * Scale shape: the [[topK]] scan of 8 bytes/vector touching
+    * XOR+POPCNT per word. This is the cheapest full-scan retrieval
+    * arithmetic in the file; its recall ceiling (1 bit/dim cannot rank
+    * what it cannot resolve) is what [[rerankL2]] on a widened shortlist
+    * buys back.
     *
     * Drift guard: a `codes` frame packed at a DIFFERENT dim than the
     * queries would yield word-count-mismatched pairs, whose
@@ -1458,24 +1542,27 @@ object Similarity {
         s"hammingTopK: codes were packed at dim=$d but queries encode " +
           s"at dim=$dim — every distance would be NULL and every pair " +
           "would silently drop"))
-    val q = binQuantize(queries, idCol, vecCol, dim)
-      .where(col("bin_words").isNotNull)
-      .select(col(idCol).as("query_id"), col("bin_words").as("_qw"))
-    val c = codes
-      .where(col("bin_words").isNotNull)
-      .select(col(idCol).as("neighbor_id"), col("bin_words").as("_cw"))
-    // native codegen kernel (graft.functions.VecHamming): the scan is
-    // |queries| × |corpus| evaluations of XOR+POPCNT per word — the
-    // vec_dot precedent; the composed zip_with/aggregate form pays a
-    // lambda dispatch per word per pair (measured ~2× slower on the
-    // 2000-query planted leg, SCALE.md round 12)
-    val hd = call_function("vec_hamming", col("_qw"), col("_cw"))
-    adcRank(
-      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc", hd.cast("double")), k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("adc").cast("long").as("hamming"))
+    hammingScan(
+      binQuantize(queries, idCol, vecCol, dim)
+        .select(col(idCol).as("query_id"), col("bin_words").as("_qw")),
+      codes.select(col(idCol).as("neighbor_id"), col("bin_words").as("_cw")),
+      None, k)
   }
+
+  /** The Hamming scan: `(query_id, _qw)` against `(neighbor_id, _cw)`;
+    * a NULL code on either side drops its rows before the join. The
+    * kernel is native codegen (graft.functions.VecHamming): the scan is
+    * |queries| × |corpus| evaluations of XOR+POPCNT per word — the
+    * vec_dot precedent; the composed zip_with/aggregate form pays a
+    * lambda dispatch per word per pair (measured ~2× slower on the
+    * 2000-query planted leg, SCALE.md round 12).
+    */
+  private def hammingScan(
+      q: DataFrame, c: DataFrame, key: Option[String], k: Int): DataFrame =
+    distanceOut(
+      topK(q.where(col("_qw").isNotNull), c.where(col("_cw").isNotNull), key,
+        call_function("vec_hamming", col("_qw"), col("_cw")), k, distanceKey),
+      "hamming", "long")
 
   /** IVF ∘ binary: the coarse cosine cells of [[ivfPqTopK]] composed
     * with the Hamming code scan — per-query candidates shrink from n to
@@ -1508,31 +1595,20 @@ object Similarity {
           binWordsCol(col(vecCol), dim).as("_cw")),
       queries, idCol, vecCol, cents, dim, nprobe, k)
 
-  /** ONE definition of the cell-restricted Hamming scan tail — query
-    * encode + cell join + self-exclusion + native kernel + partial-agg
-    * rank — shared by the inline ([[ivfBinTopKFrom]]) and artifact
-    * ([[ivfBinProbe]]) paths, which differ ONLY in where the corpus
-    * frame `(neighbor_id, _cell, _cw)` comes from; the probe ≡ inline
-    * spec pin holds by construction instead of by parallel maintenance.
+  /** The cell-restricted Hamming scan shared by the inline
+    * ([[ivfBinTopKFrom]]) and artifact ([[ivfBinProbe]]) paths, which
+    * differ ONLY in where the corpus frame `(neighbor_id, _cell, _cw)`
+    * comes from; the probe ≡ inline spec pin holds by construction.
     */
   private def ivfBinRank(
       corpusSide: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, cents: Seq[(Long, Seq[Double])], dim: Int,
-      nprobe: Int, k: Int): DataFrame = {
-    val c = corpusSide.where(col("_cw").isNotNull)
-    val q = withCells(queries, idCol, vecCol, cents, nprobe)
-      .select(col(idCol).as("query_id"), col("_cell"),
-        binWordsCol(col(vecCol), dim).as("_qw"))
-      .where(col("_qw").isNotNull)
-    adcRank(
-      c.join(broadcast(q), Seq("_cell"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc",
-          call_function("vec_hamming", col("_qw"), col("_cw"))
-            .cast("double")), k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-        col("adc").cast("long").as("hamming"))
-  }
+      nprobe: Int, k: Int): DataFrame =
+    hammingScan(
+      withCells(queries, idCol, vecCol, cents, nprobe)
+        .select(col(idCol).as("query_id"), col("_cell"),
+          binWordsCol(col(vecCol), dim).as("_qw")),
+      corpusSide, Some("_cell"), k)
 
   /** `_params` stamp of the binary artifact: packing dim + coarse cells.
     * Unlike IVFADC's two-model stamp there is no codebook half — dim is
@@ -1578,18 +1654,16 @@ object Similarity {
       cents: Seq[(Long, Seq[Double])], dim: Int, numBuckets: Int,
       target: String, table: String,
       tablePrefix: String = "ivfbin"): Seq[(Long, Seq[Double])] = {
-    graft.sources
-      .BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), tablePrefix)
+    cellSink(numBuckets, tablePrefix)
       .write(ivfBinRows(corpus, idCol, vecCol, cents, dim),
         target, table, "parquet")
     cents
   }
 
   /** Probe the persisted binary artifact: queries assign + pack
-    * map-side, join the bucketed signatures on `_cell` with zero
-    * corpus-side Exchange, rank by the native Hamming kernel —
-    * bit-identical to [[ivfBinTopKFrom]] on the same corpus
-    * (spec-pinned). The `_params` stamp fails loudly on EITHER drift
+    * map-side, join the signatures on `_cell`, rank by the native
+    * Hamming kernel — bit-identical to [[ivfBinTopKFrom]] on the same
+    * corpus (spec-pinned). The `_params` stamp fails loudly on EITHER drift
     * axis: wrong cells join wrong buckets, wrong dim yields
     * NULL-dropping word mismatches — both are silent recall collapses
     * without the guard.
@@ -1793,16 +1867,7 @@ object Similarity {
     * table[s][code_s] — m element_at lookups per candidate, all codegen,
     * no vector arithmetic on the scan.
     *
-    * Shape mirrors [[bruteForceTopK]] on the scan side — queries
-    * broadcast with their tables, the encoded corpus streams through one
-    * scan with zero shuffle of the big side — but ranks through the
-    * partial-aggregable [[graft.functions.TopKAggregator]] rather than a
-    * `row_number` window: each map task reduces its scored pairs to a
-    * k-element buffer BEFORE the shuffle, so the exchange carries
-    * |queries|×k rows per partition instead of the full corpus×queries
-    * scored set (the window shape sorts every scored pair — at 100 TB
-    * that exchange IS the plan, contradicting the operator's own
-    * bytes-bounded-scan rationale). The win over brute force is bytes:
+    * Same [[topK]] scan as [[bruteForceTopK]]; the win over it is bytes:
     * the scan touches m small ints per row instead of dim floats (×64
     * less memory traffic at m=8/dim=64), which is what a 100 TB corpus
     * scan is bounded by. The table build itself uses higher-order
@@ -1823,50 +1888,63 @@ object Similarity {
     * mean-derived doubles.
     *
     * A malformed QUERY vector (wrong length, null element, NaN) yields
-    * NULL table entries and thus NULL `_adc` for every pair; those rows
-    * are dropped explicitly — the query returns no neighbors rather
+    * NULL table entries and thus a NULL ADC score for every pair; those rows
+    * are dropped by [[rankBy]] — the query returns no neighbors rather
     * than an arbitrary id-ordered top-k (ascending NULLS FIRST under the
     * old window shape), mirroring bruteForceTopK's NaN discipline.
     */
   def pqTopK(
       queries: DataFrame, encoded: DataFrame, idCol: String,
-      vecCol: String, k: Int, model: PqModel): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"),
-      adcTable(col(vecCol), model).as("_tbl"))
-    val c = encoded.select(col(idCol).as("neighbor_id"), col("codes"))
-      .where(col("codes").isNotNull)
-    adcRank(
-      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc", adcScore(model)), k)
-  }
+      vecCol: String, k: Int, model: PqModel): DataFrame =
+    adcScan(
+      queries.select(col(idCol).as("query_id"),
+        adcTable(col(vecCol), model).as("_tbl")),
+      encoded.select(col(idCol).as("neighbor_id"), col("codes"))
+        .where(col("codes").isNotNull),
+      None, model, k)
+
+  /** The ADC scan: `(query_id, _tbl)` against `(neighbor_id, codes)`. */
+  private def adcScan(
+      q: DataFrame, c: DataFrame, key: Option[String], model: PqModel,
+      k: Int): DataFrame =
+    distanceOut(
+      topK(q, c, key, adcScore(model), k, distanceKey), "adc")
 
   /** Exact squared-L2 top-k — the ADC family's ground truth and the
     * exact-metric baseline PQ approximates (PQ/ADC is an L2 method;
     * measuring its recall against the COSINE brute force conflates
     * quantization error with a metric mismatch — on unnormalized
     * corpora the two orderings genuinely differ). Same plan shape as
-    * [[bruteForceTopK]]: queries broadcast, corpus streams, rank by
-    * (d² ASC, neighbor ASC) through the shared partial-aggregable top-k
-    * tail. The per-pair distance uses higher-order lambdas
+    * [[bruteForceTopK]] ([[topK]] with no key), ranked by (d² ASC,
+    * neighbor ASC). The per-pair distance uses higher-order lambdas
     * (CodegenFallback) — acceptable for the truth/re-rank passes this
     * exists for; the production approximate path is the codegen'd ADC
     * scan it grounds.
     */
   def bruteForceTopKL2(
       queries: DataFrame, corpus: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-    val d2 = aggregate(
-      zip_with(col("_qv"), col("_cv"), (a, b) => {
-        val d = a.cast("double") - b.cast("double")
+      vecCol: String, k: Int): DataFrame =
+    l2Scan(
+      queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv")),
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv")),
+      None, k)
+
+  /** The exact-L2 scan: `(query_id, _qv)` against `(neighbor_id, _cv)`. */
+  private def l2Scan(
+      q: DataFrame, c: DataFrame, key: Option[String], k: Int): DataFrame =
+    distanceOut(
+      topK(q, c, key, l2sq(col("_qv"), col("_cv")), k, distanceKey), "d2")
+
+  /** Exact squared L2 of two float-array columns: cast to double,
+    * subtract, square, left-fold — the route the DuckDB twins mirror bit
+    * for bit. A NaN distance (malformed vector) is NULL, so its row drops.
+    */
+  private def l2sq(a: Column, b: Column): Column =
+    nanvl(aggregate(
+      zip_with(a, b, (x, y) => {
+        val d = x.cast("double") - y.cast("double")
         d * d
-      }), lit(0.0), (acc, x) => acc + x)
-    adcRank(
-      c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc", when(isnan(d2), lit(null)).otherwise(d2)), k)
-      .withColumnRenamed("adc", "d2")
-  }
+      }), lit(0.0), (acc, x) => acc + x), lit(null).cast("double"))
 
   /** Exact-L2 re-rank of an ANN shortlist — the second stage of the
     * standard two-stage retrieval ([[pqTopK]]/[[ivfPqTopK]] produce a
@@ -1884,11 +1962,12 @@ object Similarity {
     * up to the quantizer's resolution floor; past it, spend bits not
     * candidates.
     *
-    * Scale shape: the shortlist is |queries|×k′ rows — BROADCAST side —
-    * so the corpus streams through one more scan with a broadcast hash
-    * join on id and zero shuffle; only shortlist survivors (tiny) reach
-    * the exact-distance lambda and the partial-aggregable rank tail. No
-    * corpus row is scored that the shortlist didn't nominate.
+    * Scale shape: [[topK]] keyed on the neighbor id — the shortlist is
+    * |queries|×k′ rows on the broadcast side, the corpus streams through
+    * one more scan, and only shortlist survivors (tiny) reach the
+    * exact-distance lambda. No corpus row is scored that the shortlist
+    * didn't nominate, and a self-pair in the shortlist is dropped like
+    * every other top-k here drops it.
     *
     * Rank contract mirrors the whole family: (d² ASC, neighbor ASC),
     * identical arithmetic route on both engines (cast-to-double,
@@ -1898,21 +1977,13 @@ object Similarity {
     */
   def rerankL2(
       queries: DataFrame, corpus: DataFrame, shortlist: DataFrame,
-      idCol: String, vecCol: String, k: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-    val s = shortlist.select(col("query_id"), col("neighbor_id"))
-      .join(q, Seq("query_id"))
-    val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv"))
-    val d2 = aggregate(
-      zip_with(col("_qv"), col("_cv"), (a, b) => {
-        val d = a.cast("double") - b.cast("double")
-        d * d
-      }), lit(0.0), (acc, x) => acc + x)
-    adcRank(
-      c.join(broadcast(s), Seq("neighbor_id"))
-        .withColumn("_adc", when(isnan(d2), lit(null)).otherwise(d2)), k)
-      .withColumnRenamed("adc", "d2")
-  }
+      idCol: String, vecCol: String, k: Int): DataFrame =
+    l2Scan(
+      shortlist.select(col("query_id"), col("neighbor_id"))
+        .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv")),
+          Seq("query_id")),
+      corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("_cv")),
+      Some("neighbor_id"), k)
 
   /** The per-query m×ks ADC distance table (exact squared-L2 from the
     * raw query vector to every trained codeword, 6dp DECIMAL(18,6)
@@ -1920,13 +1991,12 @@ object Similarity {
     * probes so the scoring contract cannot fork.
     */
   private def adcTable(vec: Column, model: PqModel): Column = {
-    val sub = model.subDim
     // explicit length guard, the pqEncode discipline mirrored onto the
     // QUERY side: a vector LONGER than model.dim slices cleanly into all
     // m subspaces and would silently score on its first dim elements; a
     // SHORTER one already poisons via the zip_with length behavior, but
     // one equality check covers both directions and a NULL vector falls
-    // through to the NULL branch (NULL _tbl → the row drops in adcRank)
+    // through to the NULL branch (NULL _tbl → the row drops in rankBy)
     when(size(vec) === model.dim, adcTableUnchecked(vec, model))
   }
 
@@ -1967,66 +2037,6 @@ object Similarity {
       .map(s => element_at(element_at(col("_tbl"), s + 1),
         col("codes").getItem(s) + 1))
       .reduce(_ + _)
-
-  /** Shared rank tail of the ADC scans: NULL `_adc` rows drop (the
-    * malformed-query discipline), then the partial-aggregable
-    * [[graft.functions.TopKAggregator]] keeps k rows per (partition,
-    * query) ahead of the one exchange. value = −adc because the
-    * aggregator keeps value DESC, id ASC ⇒ adc ASC, ties to the smaller
-    * neighbor_id — the row_number contract without the full-width window
-    * shuffle.
-    */
-  private[graft] def adcRank(scored: DataFrame, k: Int): DataFrame = {
-    val topk = graft.functions.TopKAggregator.topK(k)
-    scored
-      .where(col("_adc").isNotNull)
-      .groupBy("query_id")
-      .agg(topk(negate(col("_adc").cast("double")), col("neighbor_id"))
-        .as("_top"))
-      .select(col("query_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
-      .select(col("query_id"), col("_t._2").as("neighbor_id"),
-        (col("_i") + 1).cast("int").as("rank"),
-        negate(col("_t._1")).as("adc"))
-  }
-
-  /** Shared rank tail of the COSINE scans ([[bruteForceTopK]],
-    * [[ivfTopK]], [[ivfProbe]], [[lshTopK]]) — the score-DESC mirror of
-    * [[adcRank]], so every retrieval family ranks through the same
-    * partial-aggregable [[graft.functions.TopKAggregator]]: each map task
-    * reduces its scored pairs to a k-element buffer BEFORE the shuffle,
-    * where the previous `row_number` window sorted the WHOLE per-query
-    * candidate set through one exchange (at 100 TB the window exchange
-    * is the plan; the aggregator exchange carries |queries|×k rows per
-    * partition).
-    *
-    * Rank contract preserved exactly: score DESC, ties to the smaller
-    * neighbor_id — the aggregator keeps (value DESC, id ASC). Two edge
-    * disciplines carried over from the window shape:
-    *   - NaN ranks GREATEST (the documented zero-norm-cosine semantics;
-    *     Spark's DESC sort puts NaN first). Scala's total ordering on
-    *     Double would instead sort −NaN last, so NaN is encoded as the
-    *     sentinel 2.0 on the way in and decoded back on the way out —
-    *     lossless because cosine is confined to [−1, 1] ∪ {NaN}, so 2.0
-    *     is unreachable as a genuine score.
-    *   - NULL scores DROP (a NULL vector / malformed row), aligning the
-    *     cosine family with the ADC/Hamming malformed-input discipline —
-    *     the typed aggregator would otherwise decode NULL as 0.0 and
-    *     silently rank garbage mid-pack.
-    */
-  private[graft] def scoreRank(scored: DataFrame, k: Int): DataFrame = {
-    val topk = graft.functions.TopKAggregator.topK(k)
-    val enc = when(isnan(col("score")), lit(2.0))
-      .otherwise(col("score").cast("double"))
-    scored
-      .where(col("score").isNotNull)
-      .groupBy("query_id")
-      .agg(topk(enc, col("neighbor_id")).as("_top"))
-      .select(col("query_id"), posexplode(col("_top")).as(Seq("_i", "_t")))
-      .select(col("query_id"), col("_t._2").as("neighbor_id"),
-        (col("_i") + 1).cast("int").as("rank"),
-        when(col("_t._1") === 2.0, lit(Double.NaN))
-          .otherwise(col("_t._1")).as("score"))
-  }
 
   // --------------------------------------------------------------------
   // IVFADC (Jégou et al. 2011 §V: IVF coarse quantizer composed with the
@@ -2104,9 +2114,7 @@ object Similarity {
   private def withCellResid(
       corpus: DataFrame, idCol: String, vecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val ordered = cents.sortBy(_._1)
-    val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-    val cidArr = modelConst(typedlit(ordered.map(_._1)))
+    val (mat, cidArr) = centModel(cents)
     val ci = call_function("vec_argmax_cell", col(vecCol), mat)
     corpus.select(col(idCol), col(vecCol),
       element_at(cidArr, ci + 1).as("_cell"),
@@ -2128,9 +2136,7 @@ object Similarity {
         .where(col("_cell").isNotNull)
         .select(col(idCol), col("_cell"), col("_rv"))
     else {
-      val ordered = cents.sortBy(_._1)
-      val mat = modelConst(typedlit(ordered.map(_._2.toSeq)))
-      val cidArr = modelConst(typedlit(ordered.map(_._1)))
+      val (mat, cidArr) = centModel(cents)
       queries
         .select(col(idCol), col(vecCol),
           explode(call_function("vec_top_cells", col(vecCol), mat,
@@ -2193,9 +2199,7 @@ object Similarity {
     * cells. Corpus rows carry their one max-cosine cell (the [[ivfTopK]]
     * coarse quantizer, same seeds/tie contract) and their PQ codes (both
     * map-side projections fused into one pass — no self-join); queries
-    * fan out to `nprobe` cells with their broadcast ADC tables. The join
-    * is a broadcast hash join on `_cell`, so the corpus never shuffles,
-    * and the rank tail is the shared partial-aggregable top-k.
+    * fan out to `nprobe` cells with their ADC tables.
     *
     * By construction the raw arm's result is [[pqTopK]] restricted to
     * pairs sharing a probed cell — the IvfPqSpec pins that equivalence,
@@ -2227,62 +2231,44 @@ object Similarity {
   def ivfPqTopKFrom(
       queries: DataFrame, corpus: DataFrame, idCol: String, vecCol: String,
       k: Int, cents: Seq[(Long, Seq[Double])], model: PqModel,
-      nprobe: Int = 1, residual: Boolean = false): DataFrame = {
-    val c = ivfPqScan(corpus, idCol, vecCol, cents, model, residual)
-    val q = ivfPqQueries(queries, idCol, vecCol, cents, model, nprobe,
-      residual)
-    adcRank(
-      c.join(broadcast(q), Seq("_cell"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc", adcScore(model)), k)
+      nprobe: Int = 1, residual: Boolean = false): DataFrame =
+    // the corpus side is ivfPqRows's projection (ONE definition of the
+    // encode-side contract, so the inline scan cannot fork from the
+    // artifact/ingest rows) minus the constant `_params` stamp
+    ivfPqRank(
+      ivfPqRows(corpus, idCol, vecCol, cents, model, residual)
+        .select(col(idCol).as("neighbor_id"), col("_cell"), col("codes"))
+        .where(col("codes").isNotNull && col("_cell").isNotNull),
+      queries, idCol, vecCol, cents, model, nprobe, residual, k)
+
+  /** The cell-restricted ADC scan shared by the inline
+    * ([[ivfPqTopKFrom]]) and artifact ([[ivfPqProbe]]) paths, which
+    * differ ONLY in where the corpus frame `(neighbor_id, _cell, codes)`
+    * comes from.
+    *
+    * The query side is `(query_id, _cell, _tbl)` per probed cell.
+    * Residual arm: the ADC table is per (query, PROBED CELL) — distances
+    * go to `cent_cell + codeword`, so each probe row subtracts its own
+    * cell's centroid (native `vec_sub_at`) before the table build. Still
+    * broadcast-side work: nprobe × |queries| table builds, never a
+    * corpus-side op.
+    */
+  private def ivfPqRank(
+      corpusSide: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, cents: Seq[(Long, Seq[Double])], model: PqModel,
+      nprobe: Int, residual: Boolean, k: Int): DataFrame = {
+    val q =
+      if (residual)
+        withCellsResid(queries, idCol, vecCol, cents, nprobe)
+          .select(col(idCol).as("query_id"), col("_cell"),
+            adcTable(col("_rv"), model).as("_tbl"))
+      else
+        withCells(queries, idCol, vecCol, cents, nprobe)
+          .select(col(idCol).as("query_id"), col("_cell"),
+            adcTable(col(vecCol), model).as("_tbl"))
+    adcScan(q, corpusSide, Some("_cell"), model, k)
   }
 
-  /** Corpus side of the inline IVFADC scan: `(neighbor_id, _cell,
-    * codes)` — [[ivfPqRows]]'s projection (ONE definition of the
-    * encode-side contract, so the inline scan cannot fork from the
-    * artifact/ingest rows) minus the constant `_params` stamp.
-    */
-  private def ivfPqScan(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], model: PqModel,
-      residual: Boolean): DataFrame =
-    ivfPqRows(corpus, idCol, vecCol, cents, model, residual)
-      .select(col(idCol).as("neighbor_id"), col("_cell"), col("codes"))
-      .where(col("codes").isNotNull && col("_cell").isNotNull)
-
-  /** Query side of the ADC probes: `(query_id, _cell, _tbl)` per probed
-    * cell. Residual arm: the ADC table is per (query, PROBED CELL) —
-    * distances go to `cent_cell + codeword`, so each probe row subtracts
-    * its own cell's centroid (native `vec_sub_at`) before the table
-    * build. Still broadcast-side work: nprobe × |queries| table builds,
-    * never a corpus-side op.
-    */
-  private def ivfPqQueries(
-      queries: DataFrame, idCol: String, vecCol: String,
-      cents: Seq[(Long, Seq[Double])], model: PqModel, nprobe: Int,
-      residual: Boolean): DataFrame =
-    if (residual)
-      withCellsResid(queries, idCol, vecCol, cents, nprobe)
-        .select(col(idCol).as("query_id"), col("_cell"),
-          adcTable(col("_rv"), model).as("_tbl"))
-    else
-      withCells(queries, idCol, vecCol, cents, nprobe)
-        .select(col(idCol).as("query_id"), col("_cell"),
-          adcTable(col(vecCol), model).as("_tbl"))
-
-  /** Persist the IVFADC artifact: `(id, _cell, codes, _params)` bucketed
-    * by `_cell` through [[graft.sources.BucketedSink]] — the [[ivfBuild]]
-    * split with the PQ codes riding the same write. Note what is NOT
-    * stored: the raw vectors. ADC scores against the codes alone, so the
-    * serving artifact is ~4 bytes of code word per vector instead of
-    * dim×4 float bytes — this artifact is where PQ's 64× storage cut is
-    * realized at rest (parquet dictionary + bit-packing store the dense
-    * small ints at their information content; see SCALE.md). The PQ
-    * model arrives TRAINED (callers use [[pqTrain]]) so the training-set
-    * choice stays with the caller — artifact on disk, model in hand,
-    * exactly the [[ivfProbe]] contract. Read it back catalog-resolved
-    * via [[ivfAssigned]]`(spark, target, table, "ivfpq")`.
-    */
   /** The artifact row projection shared by [[ivfPqBuild]], [[ivfPqAppend]]
     * and the streaming ingest ([[graft.streaming.EventStream.ivfPqIngest]]):
     * assign cells + encode codes map-side against the two models, stamp
@@ -2311,6 +2297,19 @@ object Similarity {
     Dedup.requireStoreParams(
       assigned, ivfPqParams(cents, model, residual), "IVFADC")
 
+  /** Persist the IVFADC artifact: `(id, _cell, codes, _params)` bucketed
+    * by `_cell` through [[graft.sources.BucketedSink]] — the [[ivfBuild]]
+    * split with the PQ codes riding the same write. Note what is NOT
+    * stored: the raw vectors. ADC scores against the codes alone, so the
+    * serving artifact is ~4 bytes of code word per vector instead of
+    * dim×4 float bytes — this artifact is where PQ's 64× storage cut is
+    * realized at rest (parquet dictionary + bit-packing store the dense
+    * small ints at their information content; see SCALE.md). The PQ
+    * model arrives TRAINED (callers use [[pqTrain]]) so the training-set
+    * choice stays with the caller — artifact on disk, model in hand,
+    * exactly the [[ivfProbe]] contract. Read it back catalog-resolved
+    * via [[ivfAssigned]]`(spark, target, table, "ivfpq")`.
+    */
   def ivfPqBuild(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCentroids: Int, model: PqModel, numBuckets: Int,
@@ -2331,10 +2330,9 @@ object Similarity {
       target: String, table: String,
       tablePrefix: String = "ivfpq",
       residual: Boolean = false): Seq[(Long, Seq[Double])] = {
-    val assigned = ivfPqRows(corpus, idCol, vecCol, cents, model, residual)
-    graft.sources
-      .BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), tablePrefix)
-      .write(assigned, target, table, "parquet")
+    cellSink(numBuckets, tablePrefix).write(
+      ivfPqRows(corpus, idCol, vecCol, cents, model, residual),
+      target, table, "parquet")
     cents
   }
 
@@ -2357,10 +2355,9 @@ object Similarity {
       target: String, table: String, tablePrefix: String = "ivfpq",
       residual: Boolean = false): Unit = {
     requireIvfPqParams(assigned, cents, model, residual)
-    val rows = ivfPqRows(batch, idCol, vecCol, cents, model, residual)
-    graft.sources
-      .BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), tablePrefix)
-      .append(rows, target, table)
+    cellSink(numBuckets, tablePrefix)
+      .append(ivfPqRows(batch, idCol, vecCol, cents, model, residual),
+        target, table)
   }
 
   /** Compact an appended IVFADC artifact into a NEW table: every
@@ -2390,17 +2387,15 @@ object Similarity {
     require(fromTable != toTable,
       "ivfPqCompact writes a NEW table — flip probes and drop the old " +
         "one after; an in-place overwrite would be lossy on crash")
-    val sink = graft.sources
-      .BucketedSink(numBuckets, Seq("_cell"), Seq("_cell"), tablePrefix)
+    val sink = cellSink(numBuckets, tablePrefix)
     val assigned = sink.read(spark, target, fromTable)
     sink.write(assigned.repartition(numBuckets, col("_cell")),
       target, toTable, "parquet")
   }
 
   /** Probe a persisted [[ivfPqBuild]] artifact: queries assign map-side
-    * (cells + ADC tables, no corpus touch), join the bucketed codes on
-    * `_cell` with zero corpus-side Exchange, score by table lookups,
-    * rank partial-aggregable. Bit-identical to [[ivfPqTopK]] on the same
+    * (cells + ADC tables, no corpus touch), join the codes on `_cell`,
+    * score by table lookups. Bit-identical to [[ivfPqTopK]] on the same
     * corpus/model (spec-pinned). The `_params` stamp guards BOTH models:
     * a different coarse quantizer joins wrong cells, a different
     * codebook reads wrong tables — either is a silent recall collapse,
@@ -2411,16 +2406,10 @@ object Similarity {
       vecCol: String, k: Int, cents: Seq[(Long, Seq[Double])],
       model: PqModel, nprobe: Int = 1,
       residual: Boolean = false): DataFrame = {
-    Dedup.requireStoreParams(
-      assigned, ivfPqParams(cents, model, residual), "IVFADC")
-    val q = ivfPqQueries(queries, idCol, vecCol, cents, model, nprobe,
-      residual)
-    val c = assigned
-      .select(col(idCol).as("neighbor_id"), col("_cell"), col("codes"))
-      .where(col("codes").isNotNull)
-    adcRank(
-      c.join(broadcast(q), Seq("_cell"))
-        .where(col("query_id") =!= col("neighbor_id"))
-        .withColumn("_adc", adcScore(model)), k)
+    requireIvfPqParams(assigned, cents, model, residual)
+    ivfPqRank(
+      assigned.select(col(idCol).as("neighbor_id"), col("_cell"), col("codes"))
+        .where(col("codes").isNotNull),
+      queries, idCol, vecCol, cents, model, nprobe, residual, k)
   }
 }
